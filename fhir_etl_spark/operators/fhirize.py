@@ -327,53 +327,47 @@ def group_membership_table(
     )
 
 
-def assemble_group_member_array(membership: DataFrame) -> DataFrame:
-    """Parity/export-sink assembly: fold a ``group_membership`` table
-    back into ``(group_id, member array)`` rows — bit-identical to what
-    the parity-mode collect_list builders emit (sort_array gives the
-    same deterministic order). Only run where the array form is truly
-    required; this is the one place the single-row bottleneck is paid."""
-    return membership.groupBy("group_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.struct(F.col("member_ref").alias("reference")).alias("entity")
-                )
-            )
-        ).alias("member")
+def _member_array(reference: Column) -> Column:
+    """The one Group member aggregation: ``[{entity: {reference}}]`` over the
+    group's rows, sort_array'd so member order is deterministic (the
+    reference's order is Python set-iteration order — comparison must be
+    order-insensitive anyway, SURVEY.md §5.1)."""
+    return F.sort_array(
+        F.collect_list(
+            F.struct(F.struct(reference.alias("reference")).alias("entity"))
+        )
     )
 
 
-def group_1kg(
-    member_specimen_ids: DataFrame,
-    group_value: str = S.ONEKG_HEADER_URL,
-    include_member: bool = True,
-) -> DataFrame:
-    """The 1KG Group resource from a DataFrame of matched specimen ids
-    (one column ``specimen_id``; reference document_references.py:218-238).
+def assemble_group_member_array(membership: DataFrame) -> DataFrame:
+    """Parity/export-sink assembly: fold a ``group_membership`` table
+    back into ``(group_id, member array)`` rows — bit-identical to what
+    the parity-mode Group builders emit (the same aggregation). Only run
+    where the array form is truly required; this is the one place the
+    single-row bottleneck is paid."""
+    return membership.groupBy("group_id").agg(
+        _member_array(F.col("member_ref")).alias("member")
+    )
 
-    sort_array makes member order deterministic (the reference's order is
-    Python set-iteration order — comparison must be order-insensitive
-    anyway, SURVEY.md §5.1).
+
+def _group_resource(
+    member_specimen_ids: DataFrame,
+    group_id: str,
+    study_ext: Column,
+    identifier: Column,
+    include_member: bool,
+) -> DataFrame:
+    """The Group resource both cohorts emit (reference
+    document_references.py:218-238, gtex_fhirizer.py:377-395) from a
+    DataFrame of matched specimen ids (one column ``specimen_id``).
 
     ``include_member=False`` emits the Group SHELL without the member
     array — the scale-mode form (SURVEY §4.4), where membership lives in
     the distributed :func:`group_membership_table` instead of one giant
     array cell."""
-    group_id = onekg_mint_const("Group", group_value)
     if include_member:
         members = member_specimen_ids.agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.struct(
-                            F.concat(F.lit("Specimen/"), F.col("specimen_id")).alias(
-                                "reference"
-                            )
-                        ).alias("entity")
-                    )
-                )
-            ).alias("member")
+            _member_array(F.concat(F.lit("Specimen/"), F.col("specimen_id"))).alias("member")
         )
         member_fields = [F.col("member")]
     else:
@@ -383,12 +377,26 @@ def group_1kg(
         F.struct(
             F.lit("Group").alias("resourceType"),
             F.lit(group_id).alias("id"),
-            F.array(part_of_study_ext()).alias("extension"),
-            F.array(
-                identifier_struct(F.lit(group_value), S.ONEKG_MINT_SYSTEM, use=None)
-            ).alias("identifier"),
+            F.array(study_ext).alias("extension"),
+            F.array(identifier).alias("identifier"),
             F.lit("specimen").alias("type"),
             F.lit("definitional").alias("membership"),
             *member_fields,
         ).alias("resource")
+    )
+
+
+def group_1kg(
+    member_specimen_ids: DataFrame,
+    group_value: str = S.ONEKG_HEADER_URL,
+    include_member: bool = True,
+) -> DataFrame:
+    """The 1KG Group (reference document_references.py:218-238): id minted
+    from the VCF header URL; see :func:`_group_resource`."""
+    return _group_resource(
+        member_specimen_ids,
+        onekg_mint_const("Group", group_value),
+        part_of_study_ext(),
+        identifier_struct(F.lit(group_value), S.ONEKG_MINT_SYSTEM, use=None),
+        include_member,
     )

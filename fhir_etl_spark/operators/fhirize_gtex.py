@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from fhir_etl_spark.functions.identity import fhir_uuid5, namespace_for_site
 from fhir_etl_spark.functions.strings import age_bracket_to_birth_year_range, get_mime_type
 from fhir_etl_spark.operators.fhirize import (
+    _group_resource,
     codeable_concept,
     coding,
     compact,
@@ -171,46 +172,15 @@ def research_study_gtex(spark) -> DataFrame:
 def group_gtex(
     member_specimen_ids: DataFrame, include_member: bool = True
 ) -> DataFrame:
-    """GTEx Group from matched specimen ids (column ``specimen_id``;
-    gtex_fhirizer.py:377-395). Identifier system is the annotations file
-    URL; id minted from the metadata system + GTEX_V10.
-
-    ``include_member=False`` emits the SHELL without the 43,559-element
-    member array — scale mode (SURVEY §4.4) keeps membership in the
-    distributed ``group_membership`` table instead (see
-    operators/fhirize.group_membership_table)."""
-    if include_member:
-        members = member_specimen_ids.agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.struct(
-                            F.concat(F.lit("Specimen/"), F.col("specimen_id")).alias(
-                                "reference"
-                            )
-                        ).alias("entity")
-                    )
-                )
-            ).alias("member")
-        )
-        member_fields = [F.col("member")]
-    else:
-        members = member_specimen_ids.sparkSession.range(1)
-        member_fields = []
-    return members.select(
-        F.struct(
-            F.lit("Group").alias("resourceType"),
-            F.lit(GTEX_GROUP_ID).alias("id"),
-            F.array(part_of_study_ext_gtex()).alias("extension"),
-            F.array(
-                identifier_struct(
-                    F.lit(S.GTEX_STUDY_VALUE), S.GTEX_ANNOTATIONS_URL, use=None
-                )
-            ).alias("identifier"),
-            F.lit("specimen").alias("type"),
-            F.lit("definitional").alias("membership"),
-            *member_fields,
-        ).alias("resource")
+    """GTEx Group (gtex_fhirizer.py:377-395). Identifier system is the
+    annotations file URL; id minted from the metadata system + GTEX_V10;
+    see operators/fhirize._group_resource."""
+    return _group_resource(
+        member_specimen_ids,
+        GTEX_GROUP_ID,
+        part_of_study_ext_gtex(),
+        identifier_struct(F.lit(S.GTEX_STUDY_VALUE), S.GTEX_ANNOTATIONS_URL, use=None),
+        include_member,
     )
 
 

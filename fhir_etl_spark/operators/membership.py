@@ -48,26 +48,6 @@ def specimen_identifier_values(
     )
 
 
-def write_membership_table(
-    members: DataFrame,
-    group_id: str,
-    out_dir: str,
-    member_col: str = "specimen_id",
-    member_type: str = "Specimen",
-) -> str:
-    """Scale-mode Group membership (SURVEY.md §4.4): at 100 TB a Group with
-    one giant member[] array is a single-reducer ceiling — emit a
-    (group_id, member_ref) TABLE partitioned by group instead; the parity
-    exporter (operators/fhirize.group_*) assembles the array only when the
-    NDJSON export is requested."""
-    table = members.select(
-        F.lit(group_id).alias("group_id"),
-        F.concat(F.lit(member_type + "/"), F.col(member_col)).alias("member_ref"),
-    )
-    table.write.mode("overwrite").partitionBy("group_id").parquet(out_dir)
-    return out_dir
-
-
 def membership_split(
     header_ids: DataFrame, specimen_ids: DataFrame
 ) -> tuple[DataFrame, DataFrame]:

@@ -2,9 +2,9 @@
 
 The reference's only merge is file-level insert-or-update by id
 (`create_or_extend`, utils.py:101-135); SCD2 history merge lives in
-operators/scd.py; the Delta `MERGE INTO` path (sinks/upsert.delta_merge)
-is gated on jars this image lacks. This operator is the engine-native
-three-way merge the others specialize:
+operators/scd.py; Delta `MERGE INTO` needs jars the engine does not
+ship. This operator is the engine-native three-way merge the others
+specialize:
 
     WHEN MATCHED [AND cond] THEN UPDATE | DELETE
     WHEN NOT MATCHED THEN INSERT

@@ -71,7 +71,8 @@ def _validate_lines(lines: DataFrame) -> DataFrame:
         .when(~F.lower(rid).rlike(UUID_V5_REGEX), F.lit("id_not_uuid5"))
     )
 
-    semantic = F.lit(None).cast("string")
+    # one term per rule, in rule order: the first failing rule wins
+    semantic = []
     for rtype, rules in SEMANTIC_RULES.items():
         for rule_name, path, kind, args in rules:
             value = F.get_json_object("value", path)
@@ -79,16 +80,13 @@ def _validate_lines(lines: DataFrame) -> DataFrame:
                 failed = value.isNull()
             else:
                 failed = value.isNull() | ~value.isin(*args)
-            semantic = F.when(
-                (rt == rtype) & failed & semantic.isNull(),
-                F.lit(f"{rtype}.{rule_name}"),
-            ).otherwise(semantic)
+            semantic.append(F.when((rt == rtype) & failed, F.lit(f"{rtype}.{rule_name}")))
 
     return lines.select(
         "path",
         rt.alias("resource_type"),
         rid.alias("id"),
-        F.coalesce(structural, semantic).alias("error"),
+        F.coalesce(structural, *semantic).alias("error"),
         F.col("value").alias("raw"),
     )
 
@@ -133,7 +131,7 @@ def validate_dir(
         F.input_file_name().alias("path"), F.col("value")
     ).filter(F.trim("value") != "")
 
-    checked = _validate_lines(lines).cache()
+    checked = _validate_lines(lines)
     errors = checked.filter(F.col("error").isNotNull()).select(
         "path", "resource_type", "id", "error", "raw"
     )

@@ -9,11 +9,12 @@ normalized broadcast semi join instead of Python set algebra.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fhir_etl_spark.functions.strings import suffix_key
 from fhir_etl_spark.operators.fhirize_gtex import (
+    GTEX_GROUP_ID,
     fhirize_document_reference_gtex,
     fhirize_patient_gtex,
     fhirize_research_subject_gtex,
@@ -22,6 +23,7 @@ from fhir_etl_spark.operators.fhirize_gtex import (
     gtex_mint,
     research_study_gtex,
 )
+from fhir_etl_spark.pipelines import write_group_membership
 from fhir_etl_spark.sinks.ndjson import write_ndjson
 
 
@@ -95,12 +97,7 @@ def transform_gtex(
     files = explode_filelist(filelist)
     members = gtex_group_members(samples, annotations)
     if scale_mode:
-        from fhir_etl_spark.operators.fhirize import group_membership_table
-        from fhir_etl_spark.operators.fhirize_gtex import GTEX_GROUP_ID
-
-        group_membership_table(members, GTEX_GROUP_ID).write.mode(
-            "overwrite"
-        ).parquet(f"{meta_dir}/group_membership.parquet")
+        write_group_membership(members, GTEX_GROUP_ID, meta_dir)
     outputs = {
         "Patient": fhirize_patient_gtex(subjects),
         "ResearchSubject": fhirize_research_subject_gtex(subjects),

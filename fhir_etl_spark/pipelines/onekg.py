@@ -19,7 +19,6 @@ from fhir_etl_spark.operators.fhirize import (
     fhirize_research_subject_1kg,
     fhirize_specimen_1kg,
     group_1kg,
-    group_membership_table,
     onekg_mint,
     onekg_mint_const,
     research_study_1kg,
@@ -30,6 +29,7 @@ from fhir_etl_spark.operators.membership import (
     specimen_identifier_values,
     vcf_header_sample_ids,
 )
+from fhir_etl_spark.pipelines import write_group_membership
 from fhir_etl_spark.schemas import systems as S
 from fhir_etl_spark.sinks.ndjson import write_ndjson
 from fhir_etl_spark.sinks.upsert import create_or_extend
@@ -99,12 +99,8 @@ def transform_1k_files(
     )
     group_id = onekg_mint_const("Group", S.ONEKG_HEADER_URL)
     if scale_mode:
-        group = group_1kg(members, include_member=False)
-        group_membership_table(members, group_id).write.mode("overwrite").parquet(
-            f"{meta_dir}/group_membership.parquet"
-        )
-    else:
-        group = group_1kg(members)
+        write_group_membership(members, group_id, meta_dir)
+    group = group_1kg(members, include_member=not scale_mode)
 
     # DocumentReferences stamped with the Group subject (J4), deduped by id
     # (document_references.py:248 — {id: doc} dict semantics)

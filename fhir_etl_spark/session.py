@@ -113,6 +113,8 @@ def get_spark(
 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # every engine session can run Python workers (DataSources, pandas UDFs)
+    ship_package(spark)
     return spark
 
 

@@ -1,14 +1,11 @@
 """NDJSON sink (SURVEY.md §2.1 S8).
 
 The reference writes one JSON object per line per resource type
-(output_to_ndjson, oneKg_fhirizer.py:49-62). Spark's JSON sink IS NDJSON;
-two modes:
-
-- **scale** (default): ``df.write.text(dir)`` over the serialized column —
-  multi-part, parallel, the only mode that exists at 100 TB.
-- **parity**: coalesce(1) + rename to ``{ResourceType}.ndjson`` — matches
-  the reference's single-file layout for golden diffs. A deliberate
-  single-reducer ceiling, never used off the parity path.
+(output_to_ndjson, oneKg_fhirizer.py:49-62): ``{folder}/{ResourceType}.ndjson``,
+one file. Here that is a ``coalesce(1)`` text write staged in a temp dir
+and moved into place — a deliberate single-writer ceiling that keeps the
+reference's layout for golden diffs. ``write_lines`` is that write, shared
+by ``write_ndjson`` and the upsert sink (sinks/upsert.create_or_extend).
 
 Serialization happens exactly once (`to_json` on the struct column) — the
 reference round-trips JSON 2-3× per row (utils.py:220-228); the engine IR
@@ -30,40 +27,46 @@ from fhir_etl_spark.operators.prune import prune_empty
 
 def serialize(resources: DataFrame, col_name: str = "resource") -> DataFrame:
     """struct column → one JSON string per row, nulls dropped (N1 final layer)."""
+    return serialize_keeping(resources, col_name).select("json")
+
+
+def serialize_keeping(resources: DataFrame, col_name: str = "resource") -> DataFrame:
+    """:func:`serialize` that keeps every column of ``resources`` other than
+    ``col_name`` beside ``json`` (the upsert sink carries its order key)."""
     pruned = prune_empty(resources, col_name)
-    return pruned.select(
+    return pruned.withColumn(
+        "json",
         # a resource pruned to nothing serializes as '{}' (the reference's
         # remove_empty_dicts returns {} at the top level, utils.py:144-153)
         F.coalesce(
             F.to_json(F.col(col_name), {"ignoreNullFields": "true"}), F.lit("{}")
-        ).alias("json")
-    )
+        ),
+    ).drop(col_name)
+
+
+def write_lines(lines: DataFrame, folder_path: str, resource_type: str) -> str:
+    """Write the one string column of ``lines`` as ``{folder}/{ResourceType}.ndjson``
+    without collecting to the driver: stage a single-part text write, then
+    move the part into place (replacing any existing file). Returns the path."""
+    os.makedirs(folder_path, exist_ok=True)
+    target = os.path.join(folder_path, f"{resource_type}.ndjson")
+    with tempfile.TemporaryDirectory() as tmp:
+        staging = os.path.join(tmp, "out")
+        lines.coalesce(1).write.mode("overwrite").text(staging)
+        parts = sorted(glob.glob(os.path.join(staging, "part-*")))
+        assert len(parts) == 1, f"expected one part file, got {parts}"
+        shutil.move(parts[0], target)
+    return target
 
 
 def write_ndjson(
     resources: DataFrame,
     folder_path: str,
     resource_type: str,
-    parity: bool = True,
     col_name: str = "resource",
 ) -> str:
-    """Write ``{folder}/{ResourceType}.ndjson`` (parity) or a part-file
-    directory ``{folder}/{ResourceType}.ndjson.d/`` (scale). Returns the path."""
-    os.makedirs(folder_path, exist_ok=True)
-    serialized = serialize(resources, col_name)
-    if not parity:
-        out_dir = os.path.join(folder_path, f"{resource_type}.ndjson.d")
-        serialized.write.mode("overwrite").text(out_dir)
-        return out_dir
-
-    target = os.path.join(folder_path, f"{resource_type}.ndjson")
-    with tempfile.TemporaryDirectory() as tmp:
-        staging = os.path.join(tmp, "out")
-        serialized.coalesce(1).write.mode("overwrite").text(staging)
-        parts = sorted(glob.glob(os.path.join(staging, "part-*")))
-        assert len(parts) == 1, f"expected one part file, got {parts}"
-        shutil.move(parts[0], target)
-    return target
+    """Write ``{folder}/{ResourceType}.ndjson``. Returns the path."""
+    return write_lines(serialize(resources, col_name), folder_path, resource_type)
 
 
 def read_ndjson(spark, path: str, schema=None) -> DataFrame:

@@ -7,11 +7,8 @@ into {id: obj}, fold new items in — skipping ids that already exist unless
 - insert-only: existing wins; among duplicate NEW ids, the FIRST wins
 - update:      new wins;      among duplicate NEW ids, the LAST wins
 
-Expressed as anti-join + unionByName over JSON lines keyed by id. At scale
-the same merge runs as Delta ``MERGE INTO`` (whenNotMatchedInsertAll /
-whenMatchedUpdateAll) inside foreachBatch — Delta jars aren't in this
-image, so the parquet/NDJSON-precedence version is the shipping path and
-Delta is gated behind an import-try (delta_merge below).
+Expressed as anti-join + unionByName over JSON lines keyed by id, then the
+NDJSON sink's single-file write (sinks/ndjson.write_lines).
 """
 
 from __future__ import annotations
@@ -22,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fhir_etl_spark.schemas.systems import SUPPORTED_RESOURCE_TYPES
-from fhir_etl_spark.sinks.ndjson import serialize
+from fhir_etl_spark.sinks.ndjson import serialize_keeping, write_lines
 
 
 def _keyed_json(
@@ -38,21 +35,10 @@ def _keyed_json(
     guaranteed after a shuffle/repartition of ``resources``). Callers that
     shuffled first must pass ``order_col``.
     """
-    if order_col is None:
-        keyed = serialize(resources, col_name).withColumn(
-            "_seq", F.monotonically_increasing_id()
-        )
-    else:
-        # serialize() projects away every non-resource column, so carry the
-        # order column through the same prune+to_json expression ourselves
-        from fhir_etl_spark.operators.prune import prune_empty
-
-        keyed = prune_empty(resources, col_name).select(
-            F.coalesce(
-                F.to_json(F.col(col_name), {"ignoreNullFields": "true"}), F.lit("{}")
-            ).alias("json"),
-            F.col(order_col).cast("long").alias("_seq"),
-        )
+    seq = (
+        F.monotonically_increasing_id() if order_col is None else F.col(order_col).cast("long")
+    )
+    keyed = serialize_keeping(resources.select(col_name, seq.alias("_seq")), col_name)
     return keyed.select(
         F.get_json_object("json", "$.id").alias("id"), "json", "_seq"
     )
@@ -76,7 +62,6 @@ def create_or_extend(
         f"Invalid resource type: {resource_type}"
     )
     file_path = os.path.join(folder_path, f"{resource_type}.ndjson")
-
     new = _keyed_json(new_items, col_name, order_col)
     # duplicate-id precedence among new rows: first wins (insert-only) /
     # last wins (update mode) — utils.py:120-122 dict-overwrite order
@@ -97,43 +82,5 @@ def create_or_extend(
     else:
         merged = new_deduped
 
-    # rewrite the whole file (same contract as the reference) WITHOUT
-    # collecting to the driver: stage a single-part text write, then move the
-    # part into place. The single file is the parity contract's ceiling; the
-    # scale path is delta_merge below.
-    import glob
-    import shutil
-    import tempfile
-
-    os.makedirs(folder_path, exist_ok=True)
-    with tempfile.TemporaryDirectory() as tmp:
-        staging = os.path.join(tmp, "merge")
-        merged.select("json").coalesce(1).write.mode("overwrite").text(staging)
-        parts = sorted(glob.glob(os.path.join(staging, "part-*")))
-        assert len(parts) == 1, parts
-        shutil.move(parts[0], file_path)
-    return file_path
-
-
-def delta_merge(
-    spark: SparkSession,
-    new_items: DataFrame,
-    table_path: str,
-    update_existing: bool = False,
-) -> None:
-    """Scale-path upsert: Delta MERGE INTO on id. Gated: Delta jars are not
-    in this image."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-    except ImportError as exc:  # pragma: no cover
-        raise NotImplementedError(
-            "Delta Lake not available in this environment; use create_or_extend "
-            "(NDJSON precedence merge) or add delta-spark jars"
-        ) from exc
-    target = DeltaTable.forPath(spark, table_path)  # pragma: no cover
-    merge = target.alias("t").merge(  # pragma: no cover
-        new_items.alias("s"), "t.id = s.id"
-    )
-    if update_existing:  # pragma: no cover
-        merge = merge.whenMatchedUpdateAll()
-    merge.whenNotMatchedInsertAll().execute()  # pragma: no cover
+    # rewrite the whole file (same contract as the reference)
+    return write_lines(merged.select("json"), folder_path, resource_type)

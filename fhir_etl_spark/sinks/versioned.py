@@ -1,10 +1,9 @@
 """Snapshot-versioned parquet tables: time travel on a plain filesystem.
 
-The engine's Delta path (`sinks/upsert.delta_merge`) is gated on jars
-this image lacks; this module provides the table-format CONCEPT —
-atomic commits, snapshot isolation for readers, time travel, vacuum —
-with nothing but parquet + JSON manifests, the way log-structured table
-formats actually work:
+Delta Lake needs jars the engine does not ship; this module provides the
+table-format CONCEPT — atomic commits, snapshot isolation for readers,
+time travel, vacuum — with nothing but parquet + JSON manifests, the way
+log-structured table formats actually work:
 
 - every commit writes its data files into a fresh
   ``data/c-{token}/`` directory (never touching earlier files; the name

@@ -167,8 +167,7 @@ def stream_upsert_ndjson(
     checkpoint: str | None = None,
 ):
     """S9 as a streaming sink: foreachBatch + the same merge-by-id used in
-    batch (utils.py:101-135 semantics, exactly-once per epoch). At scale the
-    body becomes Delta MERGE INTO (sinks/upsert.delta_merge).
+    batch (utils.py:101-135 semantics, exactly-once per epoch).
 
     ``checkpoint`` enables restart-from-failure: the offset/commit logs
     record which epochs merged, so a query killed mid-stream resumes at

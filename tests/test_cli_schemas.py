@@ -8,12 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 
-@pytest.fixture(scope="module")
-def onekg_meta(spark, tmp_path_factory):
-    """A small end-to-end 1KG run through the CLI code path."""
-    from fhir_etl_spark import cli
-
-    staged = tmp_path_factory.mktemp("cli_staged")
+def _stage_onekg_inputs(staged):
+    """The three staged 1KG inputs: sample_info TSV, FTP listing, VCF header."""
     tsv = staged / "sample_info.tsv"
     tsv.write_text(
         "Sample\tGender\tPopulation Description\tPopulation\tDNA Source from Coriell\tMain project LC platform\n"
@@ -31,22 +27,17 @@ def onekg_meta(spark, tmp_path_factory):
     )
     header = staged / "header"
     header.write_text("#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tHG00096\tZZZ\n")
+    return ["--sample-info", str(tsv), "--ftp-listing", str(listing), "--vcf-header", str(header)]
+
+
+@pytest.fixture(scope="module")
+def onekg_meta(spark, tmp_path_factory):
+    """A small end-to-end 1KG run through the CLI code path."""
+    from fhir_etl_spark import cli
+
+    inputs = _stage_onekg_inputs(tmp_path_factory.mktemp("cli_staged"))
     meta = tmp_path_factory.mktemp("cli_meta")
-    rc = cli.main(
-        [
-            "transform",
-            "-p",
-            "1kgenomes",
-            "--meta-dir",
-            str(meta),
-            "--sample-info",
-            str(tsv),
-            "--ftp-listing",
-            str(listing),
-            "--vcf-header",
-            str(header),
-        ]
-    )
+    rc = cli.main(["transform", "-p", "1kgenomes", "--meta-dir", str(meta), *inputs])
     assert rc == 0
     return meta
 
@@ -75,14 +66,70 @@ def test_structural_roundtrip_catches_shape_drift(spark, tmp_path):
     assert not rows[0]["structurally_valid"]
 
 
-def test_membership_table_scale_mode(spark, tmp_path):
-    from fhir_etl_spark.operators.membership import write_membership_table
+def test_scale_mode_writes_membership_table(spark, onekg_meta, tmp_path):
+    """scale_mode writes the Group shell plus group_membership.parquet, one
+    (group_id, member_ref) row per member, next to the other resources."""
+    import shutil
 
-    members = spark.createDataFrame([("u1",), ("u2",)], "specimen_id string")
-    out = write_membership_table(members, "g-1", str(tmp_path / "membership"))
-    back = spark.read.parquet(out)
+    from fhir_etl_spark.operators.fhirize import onekg_mint_const
+    from fhir_etl_spark.pipelines.onekg import transform_1k_files
+    from fhir_etl_spark.schemas import systems as S
+
+    meta = tmp_path / "meta"
+    shutil.copytree(onekg_meta, meta)
+    (meta / "Group.ndjson").unlink()
+    (meta / "DocumentReference.ndjson").unlink()
+    listing = spark.createDataFrame(
+        [("ALL.chr1.x.vcf.gz", 100, "2014-09-12T14:21:07")],
+        "file string, size long, last_modified string",
+    )
+    header = tmp_path / "header"
+    header.write_text("#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tHG00096\tHG00097\n")
+    counts = transform_1k_files(spark, listing, str(header), str(meta), scale_mode=True)
+    assert counts == {"header_ids": 2, "found": 2, "missing": 0}
+
+    group_id = onekg_mint_const("Group", S.ONEKG_HEADER_URL)
+    back = spark.read.parquet(str(meta / "group_membership.parquet"))
     rows = {(r["group_id"], r["member_ref"]) for r in back.collect()}
-    assert rows == {("g-1", "Specimen/u1"), ("g-1", "Specimen/u2")}
+    with open(meta / "Specimen.ndjson") as f:
+        specimen_ids = {json.loads(line)["id"] for line in f}
+    assert rows == {(group_id, f"Specimen/{i}") for i in specimen_ids}
+    with open(meta / "Group.ndjson") as f:
+        (shell,) = [json.loads(line) for line in f]
+    assert shell["id"] == group_id and "member" not in shell
+
+
+def test_cli_transform_runs_outside_the_repo(tmp_path):
+    """The CLI from a working directory outside the source tree, with the
+    package importable only through the driver's sys.path: the Python
+    workers that run the FTP listing source must still import the package."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import fhir_etl_spark
+
+    src_root = str(Path(fhir_etl_spark.__file__).resolve().parent.parent)
+    inputs = _stage_onekg_inputs(tmp_path)
+    meta = tmp_path / "meta"
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {src_root!r})\n"
+        "from fhir_etl_spark import cli\n"
+        f"sys.exit(cli.main({['transform', '-p', '1kgenomes', '--meta-dir', str(meta), *inputs]!r}))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == {
+        "header_ids": 2, "found": 1, "missing": 1,
+    }
+    assert (meta / "DocumentReference.ndjson").read_text().count("\n") == 1
 
 def test_stage_https_file_url(tmp_path):
     """stage_https over a file:// URL: idempotent, atomic, checksum-pinned —

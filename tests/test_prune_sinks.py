@@ -6,7 +6,7 @@ import json
 
 from pyspark.sql import functions as F
 
-from fhir_etl_spark.sinks.ndjson import serialize, write_ndjson
+from fhir_etl_spark.sinks.ndjson import serialize
 from fhir_etl_spark.sinks.upsert import create_or_extend
 
 
@@ -98,17 +98,6 @@ def test_upsert_insert_only_and_update(spark, tmp_path):
     assert data["c"]["v"] == "y"
     assert data["b"]["v"] == "1"
 
-
-def test_write_ndjson_scale_mode(spark, tmp_path):
-    df = _resources(spark, [(f"id{i}", str(i)) for i in range(100)])
-    out_dir = write_ndjson(df, str(tmp_path), "Group", parity=False)
-    import glob
-
-    lines = []
-    for part in glob.glob(f"{out_dir}/part-*"):
-        with open(part) as f:
-            lines.extend(l for l in f if l.strip())
-    assert len(lines) == 100
 
 def test_upsert_explicit_order_col_survives_shuffle(spark, tmp_path):
     """monotonically_increasing_id precedence is only valid pre-shuffle; an

@@ -52,6 +52,9 @@ def test_validate_catches_errors(spark, tmp_path):
                 '{"resourceType": "Banana", "id": "fb96f2a9-8ec2-5784-ba62-16f168155434"}',
                 "this is not json",
                 '{"resourceType": "DocumentReference", "id": "fb96f2a9-8ec2-5784-ba62-16f168155434", "status": "bogus", "content": [{"attachment": {"url": "x"}}]}',
+                # each fails two rules: the first rule in SEMANTIC_RULES order is reported
+                '{"resourceType": "ResearchSubject", "id": "fb96f2a9-8ec2-5784-ba62-16f168155434", "status": "bogus", "subject": {"reference": "Patient/x"}}',
+                '{"resourceType": "Group", "id": "fb96f2a9-8ec2-5784-ba62-16f168155434", "type": "bogus", "membership": "bogus"}',
             ]
         )
     )
@@ -63,7 +66,61 @@ def test_validate_catches_errors(spark, tmp_path):
         "invalid_resource_type:Banana",
         "parse_error_or_missing_resourceType",
         "DocumentReference.status_enum",
+        "ResearchSubject.status_enum",
+        "Group.type_enum",
     }
+
+
+def test_validate_dir_reads_the_directory_as_it_is_now(spark, tmp_path):
+    """Two calls in one session over a rewritten directory: the second
+    call reports the new lines, not the first call's."""
+    good = '{"resourceType": "Patient", "id": "%s", "identifier": [{"value": "ok"}]}'
+    f = tmp_path / "Patient.ndjson"
+    f.write_text(good % "fb96f2a9-8ec2-5784-ba62-16f168155434" + "\n")
+    first = validate_dir(spark, str(tmp_path))
+    assert first.summary == {"Patient": 1} and first.ok
+
+    f.write_text(
+        "\n".join(
+            [
+                good % "fb96f2a9-8ec2-5784-ba62-16f168155434",
+                good % "fb96f2a9-8ec2-5784-ba62-16f168155435",
+                "garbage",
+            ]
+        )
+        + "\n"
+    )
+    second = validate_dir(spark, str(tmp_path))
+    assert second.summary == {"Patient": 2}
+    assert [r["raw"] for r in second.errors.collect()] == ["garbage"]
+
+
+def test_validate_plan_stays_linear_in_rules(spark):
+    """Each semantic rule adds a constant amount to the error expression;
+    nesting every rule inside the next doubled it per rule (2,339
+    get_json_object calls in the analyzed plan for the 10 rules)."""
+    from fhir_etl_spark.operators.validate import _validate_lines
+
+    lines = spark.createDataFrame([("p", "{}")], "path string, value string")
+    plan = _validate_lines(lines)._jdf.queryExecution().analyzed().toString()
+    assert plan.count("get_json_object") < 100
+
+
+def test_validate_dir_compiles_without_codegen_fallback(spark, tmp_path):
+    """With the interpreted fallback switched off, a whole-stage codegen
+    compile error in validate_dir's plan raises instead of being logged."""
+    f = tmp_path / "Group.ndjson"
+    f.write_text(
+        '{"resourceType": "Group", "id": "fb96f2a9-8ec2-5784-ba62-16f168155434", "type": "specimen", "membership": "bogus"}\n'
+    )
+    key = "spark.sql.codegen.fallback"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        result = validate_dir(spark, str(tmp_path))
+        assert [r["error"] for r in result.errors.collect()] == ["Group.membership_enum"]
+    finally:
+        spark.conf.set(key, before)
 
 @pytest.mark.skipif(not os.path.isdir(ONEKG_GOLDEN), reason="no reference checkout")
 def test_audit_mode_agrees_with_structural_on_golden(spark):
@@ -116,7 +173,7 @@ def test_audit_mode_routes_failures_to_errors(spark, tmp_path):
 
 def test_audit_mode_gated_without_fhir_resources(spark, tmp_path):
     """With no validator injected and fhir.resources absent, audit mode
-    raises NotImplementedError (honest gate, like sinks.upsert.delta_merge)."""
+    raises NotImplementedError (an honest gate, not a silent skip)."""
     f = tmp_path / "Patient.ndjson"
     f.write_text('{"resourceType": "Patient", "id": "x"}')
     try:
