@@ -87,7 +87,7 @@ HEADLINE = [
     # coverage union — two doc-local gram groupBys + one distinct),
     # int8-quantized ANN (global-absmax scalar quantization, integer
     # dot top-k — the memory-bandwidth tier of similarity search), and
-    # the streaming-dedup index read (signatures + banding + per-bucket
+    # the banded dedup index read (signatures + banding + per-bucket
     # min verdicts, no pair enumeration)
     "t17_gopher_char_repetition",
     "v9_int8_quantized_ann",
@@ -286,8 +286,8 @@ R03_FLOOR = {
     # expression pays a FLAT driver-side optimize/compile cost (exactly
     # the hilbert_key profile) that dominates at sf0.1's 1500 vectors but
     # amortizes at scale — the 1M-vector smoke went 59.8s -> 20.8s from
-    # the same change (tools/scale_smoke_r08.py). Architecture priced
-    # into the floor, not hidden under it.
+    # the same change. Architecture priced into the floor, not hidden
+    # under it.
     # tightened 1.90 -> 1.73 with the round-8 selectExpr conversion of
     # the quantize/dot construction (the py4j lesson; 1M smoke 18.7s
     # under loadavg 20, unchanged integers)
@@ -299,7 +299,7 @@ R03_FLOOR = {
     # v11's cost is FLAT driver work (2 bounded actions over a
     # 64-codeword literal plan + one Janino attempt on the fused update
     # stage), amortizing at scale: the 1M-vector smoke encodes at
-    # ~64k vec/s (tools/scale_smoke_r08c.py).
+    # ~64k vec/s.
     # v11/v12 floors re-set in r09 when codebook training moved behind
     # the persisted-model store (operators/ann_store): the Lloyd rounds
     # now run once per (corpus, recipe) and later invocations load

@@ -12,7 +12,7 @@ see SURVEY.md) as idiomatic, scale-first Spark:
 - NDJSON / parquet sinks with merge-by-id upsert semantics
 - plus the large-scale training-data operators the reference lacks:
   dedup (exact/MinHash/SimHash), similarity search, text analysis,
-  multimodal column plumbing, and structured-streaming windows.
+  multimodal column plumbing, and event-time windows as batch plans.
 
 Nothing in this package imports from, or depends on, the reference repo;
 ``file:line`` citations in docstrings point at the behavior being matched.

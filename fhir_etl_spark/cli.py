@@ -72,8 +72,24 @@ def _build_parser() -> argparse.ArgumentParser:
     return parser
 
 
+_PIPELINE_INPUTS = {
+    "1kgenomes": ("sample_info",),
+    "gtex": ("subjects", "samples", "filelist", "annotations"),
+}
+
+
 def main(argv: list[str] | None = None) -> int:
-    args = _build_parser().parse_args(argv)
+    parser = _build_parser()
+    args = parser.parse_args(argv)
+
+    if args.command == "transform":
+        missing = [
+            "--" + name.replace("_", "-")
+            for name in _PIPELINE_INPUTS[args.pipeline]
+            if not getattr(args, name)
+        ]
+        if missing:
+            parser.error(f"transform -p {args.pipeline}: {', '.join(missing)} required")
 
     if args.command in ("compact", "zorder", "partition"):
         # both verbs overwrite --dest while LAZILY reading --src: the same
@@ -137,7 +153,6 @@ def main(argv: list[str] | None = None) -> int:
     from fhir_etl_spark.sources.stage import stage_if_url
 
     if args.pipeline == "1kgenomes":
-        assert args.sample_info and args.meta_dir, "--sample-info required"
         from fhir_etl_spark.pipelines.onekg import transform_1k, transform_1k_files
 
         sample_info = stage_if_url(args.sample_info, args.bronze_dir)
@@ -156,9 +171,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     # gtex
-    assert all([args.subjects, args.samples, args.filelist, args.annotations]), (
-        "--subjects/--samples/--filelist/--annotations required"
-    )
     from fhir_etl_spark.pipelines.gtex import transform_gtex
     from fhir_etl_spark.schemas.inputs import GTEX_FILELIST, GTEX_SAMPLE, GTEX_SUBJECT
     from fhir_etl_spark.sources.rest import PaginatedRestDataSource

@@ -115,10 +115,3 @@ def mint_id(
         _col(value),
     )
     return fhir_uuid5(namespace_for_site(site), name)
-
-
-def mint_id_from_string(site: str, project_id: str, identifier: Column | str) -> Column:
-    """Mint from a raw identifier string (the non-Identifier dispatch arm of
-    the reference's ``mint_id``, utils.py:44-51)."""
-    name = F.concat(F.lit(f"{project_id}/"), _col(identifier))
-    return fhir_uuid5(namespace_for_site(site), name)

@@ -94,10 +94,3 @@ def age_bracket_to_birth_year_range(bracket: Column | str, as_of_year: int = 202
     lo = F.split(c, "-").getItem(0).cast("int")
     hi = F.split(c, "-").getItem(1).cast("int")
     return F.format_string("%d - %d", F.lit(as_of_year) - hi, F.lit(as_of_year) - lo)
-
-
-def prefix_ref(resource_type: str, id_col: Column | str) -> Column:
-    """F8: '{Type}/{uuid}' reference-string construction
-    (reference oneKg_fhirizer.py:117)."""
-    c = F.col(id_col) if isinstance(id_col, str) else id_col
-    return F.concat(F.lit(resource_type + "/"), c)

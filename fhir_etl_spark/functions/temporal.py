@@ -19,11 +19,3 @@ def parse_mdtm(mdtm: Column | str, fallback_to_now: bool = True) -> Column:
     if fallback_to_now:
         return F.coalesce(parsed, F.current_timestamp())
     return parsed
-
-
-def iso_utc(ts: Column | str) -> Column:
-    """ISO-8601 with explicit +00:00 offset — the reference appends the
-    offset textually (document_references.py:98); with a UTC session TZ
-    date_format produces the identical string."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.date_format(c, "yyyy-MM-dd'T'HH:mm:ssxxx")

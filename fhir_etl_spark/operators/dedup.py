@@ -185,8 +185,8 @@ def banded_buckets(
     """(id, band, bucket) banded-LSH index rows from MinHash signatures —
     the inverted-index half of :func:`lsh_candidate_pairs`, exposed on
     its own because the index IS the incrementally-maintainable dedup
-    state (streaming/dedup.py): the banding of a doc depends only on the
-    doc, so index(batch₁ ∪ batch₂) == index(batch₁) ∪ index(batch₂)
+    state: the banding of a doc depends only on the doc, so
+    index(batch₁ ∪ batch₂) == index(batch₁) ∪ index(batch₂)
     exactly — per-batch index rows union into the same table a
     whole-corpus build would produce. Map-only (one explode per doc)."""
 
@@ -311,8 +311,8 @@ def lsh_bucket_keepers(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
     bucket it occupies survives even if one of its bucket-mates was
     dropped for colliding elsewhere) — the property that makes the
     verdict a pure function of the index table and therefore
-    incrementally maintainable from a stream (streaming/dedup.py reads
-    verdicts off the folded index at any point). Full transitive-closure
+    incrementally maintainable (verdicts can be read off an index folded
+    batch by batch at any point). Full transitive-closure
     dedup is the batch d6 pass over :func:`lsh_candidate_pairs`.
 
     r12 optimization (guide §2.4 — remove shuffles outright): "dropped
@@ -323,8 +323,7 @@ def lsh_bucket_keepers(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
     lineage checkpoint so the index would not re-execute per consumer)
     paid four exchanges and a materialization for the same verdicts;
     the single-consumer plan needs no checkpoint at all. Verdicts are
-    identical row-for-row (pinned by the existing d12 value oracle and
-    the streaming read-path tests)."""
+    identical row-for-row (pinned by the existing d12 value oracle)."""
     w = Window.partitionBy("band", "bucket")
     return (
         banded.select(
@@ -1825,10 +1824,9 @@ def line_dedup_against(
     boilerplate-digest set (one column ``_line_d``): drop every line
     whose digest is in the set, rebuild documents in original order →
     ``(id_col, clean_text, n_lines, n_kept)``. Split out (round 11) so
-    the streaming line-digest index (streaming/dedup.
-    stream_line_dedup_index_merge) can clean an increment against the
-    WHOLE-HISTORY dup set with the identical plan the batch operator
-    uses — the dup set is data, not a different code path.
+    an increment can be cleaned against a WHOLE-HISTORY dup set with the
+    identical plan the batch operator uses — the dup set is data, not a
+    different code path.
 
     r12 optimization (guide §8 — decide with small rows, move big rows
     once): only the DROPPED line POSITIONS travel. The line stream

@@ -24,8 +24,7 @@ the incremental path must be bit-identical to a recompute — float
 addition order differs between the two.
 
 Reference parity: the reference recomputes everything per run; this is a
-north-star extension (the streaming twin is streaming/rollup.py's
-partial-aggregate fold).
+north-star extension.
 """
 
 from __future__ import annotations

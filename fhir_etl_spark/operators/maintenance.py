@@ -1,10 +1,9 @@
 """Table maintenance: file-level stats and small-file compaction.
 
-A 100 TB table accumulates small files from streaming micro-batches
-(streaming/rollup.py, stream_upsert_ndjson) and incremental upserts
-(sinks/upsert.py — the reference's create_or_extend rewrites one NDJSON
-file per run, `utils.py:101-135`, which at scale becomes millions of tiny
-objects). Small files kill scan throughput (per-file open cost, tiny row
+A 100 TB table accumulates small files from incremental appends and
+upserts (sinks/upsert.py — the reference's create_or_extend rewrites one
+NDJSON file per run, `utils.py:101-135`, which at scale becomes millions
+of tiny objects). Small files kill scan throughput (per-file open cost, tiny row
 groups, starved vectorized readers) and planner quality (one task per
 file). Compaction rewrites a directory into ~``target_bytes`` files.
 

@@ -9,9 +9,9 @@ specialize:
     WHEN MATCHED [AND cond] THEN UPDATE | DELETE
     WHEN NOT MATCHED THEN INSERT
 
-as one full-outer join + per-row CASE — a single shuffle on the key
-(or zero with both sides bucketed on the key, sinks/bucketed.py), fully
-deterministic, and ANSI-expressible so the driver can value-check it.
+as one full-outer join + per-row CASE — a single shuffle on the key,
+fully deterministic, and ANSI-expressible so the driver can value-check
+it.
 
 Scale shape: the join is key-partitioned (AQE may broadcast a small
 source); no window, no collect. Rewriting only touched partitions is a

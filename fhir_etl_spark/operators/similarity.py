@@ -18,7 +18,6 @@ results are reproducible run to run.
 
 from __future__ import annotations
 
-import math
 import random
 
 from pyspark.sql import Column, DataFrame, Window
@@ -465,66 +464,6 @@ def lsh_bucketed_neardup(
         )
         .filter(F.col("sim") >= threshold)
         .distinct()
-    )
-
-
-def centroid_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-) -> DataFrame:
-    """Assign every corpus vector to its nearest centroid by cosine — the
-    assignment step of k-means / IVF list building. Returns
-    ``(id, centroid_id, sim)``, one row per corpus vector; ties on rounded
-    similarity go to the smaller centroid id.
-
-    The centroid set is bounded BY DEFINITION (k of them), so it is
-    collected driver-side and inlined as literal arrays with precomputed
-    norms: the assignment becomes a map-only projection — no join, no
-    window, ZERO shuffle. At 100 TB this is one pure scan per k-means
-    iteration; contrast a cross-join + per-id window, which would shuffle
-    |corpus|×k scored rows. Similarity is rounded to 6 decimals before the
-    argmax (same determinism contract as :func:`cosine_topk`); the argmax
-    itself is ``array_max`` over ``struct(sim, -cid)`` so no per-row sort
-    or window is involved.
-    """
-    rows = centroids.select(id_col, vec_col).collect()
-    cents = []
-    for r in rows:
-        vec = [float(x) for x in r[vec_col]]
-        cents.append((int(r[id_col]), vec, math.sqrt(sum(x * x for x in vec))))
-    clits = F.array(
-        *[
-            F.struct(
-                F.lit(cid).cast("long").alias("cid"),
-                F.array(*[F.lit(x) for x in vec]).alias("cvec"),
-                F.lit(norm).alias("cnorm"),
-            )
-            for cid, vec, norm in cents
-        ]
-    )
-    # corpus norm materialized as a column first (computed once per row,
-    # not once per centroid — no CSE inside higher-order lambdas)
-    scored = corpus.withColumn("_cnorm", _norm(F.col(vec_col))).withColumn(
-        "_cands", clits
-    )
-    best = F.array_max(
-        F.transform(
-            "_cands",
-            lambda c: F.struct(
-                F.round(
-                    _dot(F.col(vec_col), c["cvec"]) / (F.col("_cnorm") * c["cnorm"]), 6
-                ).alias("sim"),
-                (-c["cid"]).alias("neg_cid"),
-            ),
-        )
-    )
-    return scored.select(
-        F.col(id_col),
-        (-best["neg_cid"]).alias(centroid_id_col),
-        best["sim"].alias("sim"),
     )
 
 

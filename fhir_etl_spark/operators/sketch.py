@@ -233,7 +233,7 @@ def kmv_merge(
     Entries dedup on (group, h, v) — the hashed ROW IDENTITY — before
     ranking. This is what makes min-k idempotent under re-union
     (min-k(S ∪ S) = min-k(S)) and therefore what makes overlapping-shard
-    merges and streaming epoch REPLAY safe: folding the same sketch in
+    merges and replayed folds safe: folding the same sketch in
     twice is a no-op instead of double-counting its rows (a multiset
     rank would keep both copies — round-7 review finding). The dedup is
     over ≤ k·n_sketch_rows entries, never base data.

@@ -810,8 +810,12 @@ def stupid_backoff_score(
     # N = Σ per-doc token counts — a map-only size() aggregate over the
     # reference scan (r13); identical to counting the exploded token
     # rows (split('') yields [''] on both paths), without the explode.
+    # A NULL text explodes to no tokens, but size(NULL) is -1 when ANSI
+    # mode is off, so NULL rows are kept out of the sum explicitly.
     n_ref_row = reference.agg(
-        F.sum(F.size(F.split(text_col, " "))).alias("_n")
+        F.sum(
+            F.when(F.col(text_col).isNotNull(), F.size(F.split(text_col, " ")))
+        ).alias("_n")
     ).first()
     n_ref = int(n_ref_row["_n"] or 0)  # one bounded scalar action
     if n_ref == 0:

@@ -13,8 +13,7 @@ form used here is the sorted-array left fold:
 
 which is ONE shuffle (the groupBy) and zero Python — the fold compiles to
 Catalyst expressions. The same shape backs the ds5 sequence-packing state
-machine (operators/packing.py) and the streaming rolling z-score ring
-buffer (streaming/anomaly.py).
+machine (operators/packing.py).
 
 Exactness contract (what lets the driver value-oracle w9): the fold is a
 FIXED left-to-right association — identical to a recursive-CTE replay row
@@ -28,11 +27,10 @@ order.
 
 Scale shape (100 TB): the one shuffle moves each key's rows to one task;
 per-key state arrays live in executor memory, so the operator assumes
-BOUNDED series per key (sessions, device streams — same assumption the
-streaming twin's ring buffer makes explicit). Unbounded keys want the
-streaming path (applyInPandasWithState) or a date-bucketed key. The fold's
-array-concat accumulator is O(n^2) copies per key in the worst case —
-fine at session scale (<= ~10^4 rows/key), and still JVM-side.
+BOUNDED series per key (sessions, device streams). Unbounded keys want
+a date-bucketed key. The fold's array-concat accumulator is O(n^2)
+copies per key in the worst case — fine at session scale (<= ~10^4
+rows/key), and still JVM-side.
 """
 
 from __future__ import annotations

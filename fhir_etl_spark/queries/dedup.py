@@ -306,18 +306,16 @@ _D12_ORACLE = f"""
     """
 
 
-@query("d12_lsh_bucket_keepers", oracle=_D12_ORACLE, tags=("dedup", "approx", "streaming"))
+@query("d12_lsh_bucket_keepers", oracle=_D12_ORACLE, tags=("dedup", "approx"))
 def d12_lsh_bucket_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-8 addition: DIRECT bucket-collision dedup verdicts off the
     banded LSH index — (doc_id, kept), dropped iff some occupied bucket
     holds a smaller id. No pair enumeration (a degenerate bucket costs
     O(d), not O(d²)), deliberately non-transitive, and a pure function
     of the index table — the property that makes it the read side of
-    the INCREMENTALLY-MAINTAINED streaming dedup index
-    (streaming/dedup.py: per-batch index rows union bit-exactly into
-    the whole-corpus index). md5-twin hash here so DuckDB replays every
-    stage; the streaming tier defaults to xxhash64 and is pinned by
-    stream-vs-batch equality in tests/test_streaming.py. Verdicts are
+    an incrementally-maintained dedup index (per-batch index rows union
+    bit-exactly into the whole-corpus index). md5-twin hash here so
+    DuckDB replays every stage. Verdicts are
     TOTAL over documents — docs too short to shingle ride sentinel
     singleton buckets (operators/dedup.doc_band_index) and read back
     kept=true."""

@@ -1,10 +1,8 @@
 """Event-time windowing inventory over the `events` table (SURVEY.md §2.10).
 
-These are the BATCH expressions of the streaming windows — `F.window` /
-`F.session_window` produce identical results under Structured Streaming
-with a watermark; fhir_etl_spark/streaming/windows.py wires the same
-expressions onto readStream. Oracles reproduce window assignment in plain
-SQL (time_bucket / lag+cumsum).
+Batch plans over event time — `F.window` / `F.session_window` buckets,
+gap-based sessions, interval joins. Oracles reproduce window assignment
+in plain SQL (time_bucket / lag+cumsum).
 """
 
 from __future__ import annotations
@@ -92,8 +90,8 @@ def e2_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def e3_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-minute inactivity): lag → new-session
-    flag → running sum as session id. The batch twin of
-    session_window(ts, '30 minutes') in streaming."""
+    flag → running sum as session id — the sessions
+    session_window(ts, '30 minutes') assigns."""
     events = load_tables(spark, sf_dir, "events")
     w_order = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w_run = (
@@ -157,25 +155,34 @@ def e4_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND p.purchase_ts
     GROUP BY p.purchase_id, p.user_id
     """,
-    tags=("events", "join", "streaming-twin"),
+    tags=("events", "join"),
 )
 def e5_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval-bounded attribution: every purchase joined to the same
-    user's clicks in the preceding 30 minutes. Batch twin of the
-    watermarked stream-stream join (streaming/joins.py) — identical join
-    expressions, so the streaming test compares pair sets against this."""
-    from fhir_etl_spark.streaming.joins import stream_stream_attribution
-
+    """Interval-bounded attribution: every purchase left-joined to the same
+    user's clicks in the preceding 30 minutes, then counted per purchase."""
     events = load_tables(spark, sf_dir, "events")
-    pairs = stream_stream_attribution(
-        events.filter(F.col("event_type") == "click"),
-        events.filter(F.col("event_type") == "purchase"),
-        tolerance="30 minutes",
-        join_type="left_outer",
+    c = events.filter(F.col("event_type") == "click").select(
+        F.col("user_id").alias("c_user_id"),
+        F.col("event_id").alias("click_id"),
+        F.col("ts").alias("click_ts"),
     )
-    return pairs.groupBy("purchase_id", "user_id").agg(
-        F.count("click_id").cast("long").alias("n_clicks_30m"),
-        F.unix_micros(F.max("click_ts")).alias("last_click_us"),
+    p = events.filter(F.col("event_type") == "purchase").select(
+        "user_id",
+        F.col("event_id").alias("purchase_id"),
+        F.col("ts").alias("purchase_ts"),
+    )
+    cond = (
+        (p["user_id"] == c["c_user_id"])
+        & (c["click_ts"] <= p["purchase_ts"])
+        & (c["click_ts"] >= p["purchase_ts"] - F.expr("INTERVAL 30 minutes"))
+    )
+    return (
+        p.join(c, cond, "left_outer")
+        .groupBy("purchase_id", "user_id")
+        .agg(
+            F.count("click_id").cast("long").alias("n_clicks_30m"),
+            F.unix_micros(F.max("click_ts")).alias("last_click_us"),
+        )
     )
 
 

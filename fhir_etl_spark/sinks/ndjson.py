@@ -2,10 +2,11 @@
 
 The reference writes one JSON object per line per resource type
 (output_to_ndjson, oneKg_fhirizer.py:49-62): ``{folder}/{ResourceType}.ndjson``,
-one file. Here that is a ``coalesce(1)`` text write staged in a temp dir
-and moved into place — a deliberate single-writer ceiling that keeps the
-reference's layout for golden diffs. ``write_lines`` is that write, shared
-by ``write_ndjson`` and the upsert sink (sinks/upsert.create_or_extend).
+one file. Here that is a ``coalesce(1)`` text write staged next to the
+target and renamed into place — a deliberate single-writer ceiling that
+keeps the reference's layout for golden diffs. ``write_lines`` is that
+write, shared by ``write_ndjson`` and the upsert sink
+(sinks/upsert.create_or_extend).
 
 Serialization happens exactly once (`to_json` on the struct column) — the
 reference round-trips JSON 2-3× per row (utils.py:220-228); the engine IR
@@ -46,16 +47,21 @@ def serialize_keeping(resources: DataFrame, col_name: str = "resource") -> DataF
 
 def write_lines(lines: DataFrame, folder_path: str, resource_type: str) -> str:
     """Write the one string column of ``lines`` as ``{folder}/{ResourceType}.ndjson``
-    without collecting to the driver: stage a single-part text write, then
-    move the part into place (replacing any existing file). Returns the path."""
+    without collecting to the driver: stage a single-part text write in a
+    hidden directory inside ``folder_path``, then publish the part with one
+    ``os.replace`` — a rename on the same filesystem, so after a crash the
+    old file or the new one is in place, never a torn one. Returns the path."""
     os.makedirs(folder_path, exist_ok=True)
     target = os.path.join(folder_path, f"{resource_type}.ndjson")
-    with tempfile.TemporaryDirectory() as tmp:
-        staging = os.path.join(tmp, "out")
-        lines.coalesce(1).write.mode("overwrite").text(staging)
-        parts = sorted(glob.glob(os.path.join(staging, "part-*")))
+    staging = tempfile.mkdtemp(prefix=f".{resource_type}.", dir=folder_path)
+    try:
+        out = os.path.join(staging, "out")
+        lines.coalesce(1).write.text(out)
+        parts = sorted(glob.glob(os.path.join(out, "part-*")))
         assert len(parts) == 1, f"expected one part file, got {parts}"
-        shutil.move(parts[0], target)
+        os.replace(parts[0], target)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
     return target
 
 

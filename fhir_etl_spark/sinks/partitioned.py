@@ -1,10 +1,10 @@
 """Hive-style partitioned parquet sink with dynamic partition overwrite.
 
-The third leg of the scan-pruning story (alongside Z-order clustering,
-operators/layout.py, and bucketed tables, sinks/bucketed.py): coarse
-categorical/temporal columns become directory levels, so a filtered read
-never lists — let alone scans — non-matching partitions
-(``PartitionFilters`` in the scan node, pinned by test_partitioned).
+The second leg of the scan-pruning story (alongside Z-order clustering,
+operators/layout.py): coarse categorical/temporal columns become
+directory levels, so a filtered read never lists — let alone scans —
+non-matching partitions (``PartitionFilters`` in the scan node, pinned
+by test_partitioned).
 
 Reference note: the reference writes one flat NDJSON file per resource
 type (utils.py:101-135); partitioned layout is the engine's scale

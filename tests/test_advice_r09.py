@@ -8,9 +8,7 @@ pinned by a test that fails on the pre-fix code.
    Infinity arrays instead of int8_topk's loud error.
 3. pq_adc_topk accepted a sub_len that disagreed with the codebook's
    codeword length → NULL micro-distances, silent garbage ranking.
-4. Streaming dedup state hardcoded a bigint id type — string doc ids
-   (crawl corpora) wedged/misread at the next epoch.
-5. quantile_buckets routed NULL scores to the tail label via the
+4. quantile_buckets routed NULL scores to the tail label via the
    `otherwise` fall-through — silent misclassification.
 """
 
@@ -114,51 +112,6 @@ class TestPqAdcShapeGuard:
         cb = {(0, 0): [0.0] * 8, (5, 0): [0.0] * 8}
         with pytest.raises(ValueError, match="subspace index"):
             pq_adc_topk(codes, cb, q, m=2, sub_len=8)
-
-
-def test_stream_dedup_index_string_doc_ids(spark, tmp_path):
-    """String doc ids (the common crawl-corpus key) must round-trip the
-    streamed state: schema derives the id TYPE from the stream."""
-    from fhir_etl_spark.operators.dedup import doc_band_index, lsh_bucket_keepers
-    from fhir_etl_spark.streaming.dedup import (
-        read_dedup_verdicts,
-        stream_lsh_dedup_index,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again "
-    rows = [
-        ("crawl/a", base * 3),
-        ("crawl/b", base * 3),  # near-dup of a
-        ("crawl/c", "completely different words about spark engines " * 3),
-        ("crawl/d", "short"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id string, text string")
-    src = str(tmp_path / "src")
-    docs.repartition(2).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema("doc_id string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    state = str(tmp_path / "lsh_state_str")
-    q = stream_lsh_dedup_index(spark, stream, state)
-    assert q.awaitTermination(300), "stream did not finish in time"
-
-    streamed = {
-        (r["doc_id"], r["band"], r["bucket"])
-        for r in spark.read.parquet(state).collect()
-    }
-    batch = doc_band_index(docs)
-    assert streamed == {
-        (r["doc_id"], r["band"], r["bucket"]) for r in batch.collect()
-    }
-    got = {
-        r["doc_id"]: r["kept"]
-        for r in read_dedup_verdicts(spark, state, id_type="string").collect()
-    }
-    want = {r["doc_id"]: r["kept"] for r in lsh_bucket_keepers(batch).collect()}
-    assert got == want and len(got) == 4
 
 
 def test_quantile_buckets_null_score_fails_loud(spark):

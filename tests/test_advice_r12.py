@@ -1,15 +1,10 @@
 """Repro tests for the round-11 ADVICE items:
 
-1. (medium) compact_counter_state raced with a concurrent
-   merge_counter_epoch append: the compaction overwrite must be pinned
-   to the snapshot it was derived from (require_parent) so the race
-   fails LOUDLY (ConcurrentWriteError) and the raced epoch's counts
-   survive — never a silent permanent undercount of additive state.
-2. (low) the plan-audit broadcast allowlist must scope the generic
+1. (low) the plan-audit broadcast allowlist must scope the generic
    names 'ranked' and 'counters' to their one documented call site
    ((path, name) pairs), not globally — a future F.broadcast(ranked)
    on a scaling table elsewhere must be flagged.
-3. (low) c6's cid packing (doc_id*100000 + chunk_index) must enforce
+2. (low) c6's cid packing (doc_id*100000 + chunk_index) must enforce
    its 100k-chunks/doc contract at runtime: a violating chunk_index
    raises USER_RAISED_EXCEPTION instead of silently aliasing another
    document's chunk ids into the BM25 corpus join.
@@ -24,75 +19,7 @@ import pytest
 
 import pyspark.sql.functions as F
 
-# --- 1: compaction vs concurrent epoch append ----------------------------
-
-
-def test_compact_counter_state_raced_append_fails_loudly(spark, tmp_path):
-    from fhir_etl_spark.sinks import versioned
-    from fhir_etl_spark.streaming.dedup import (
-        compact_counter_state,
-        merge_counter_epoch,
-        read_counter_state,
-    )
-
-    table = str(tmp_path / "cms_state")
-    d0 = spark.createDataFrame([(0, 1, 10), (0, 2, 20)], "row int, col int, cnt long")
-    merge_counter_epoch(spark, table, d0, 0, keys=["row", "col"])
-
-    d1 = spark.createDataFrame([(0, 1, 5)], "row int, col int, cnt long")
-    real_read = versioned.read_snapshot
-    raced = {"done": False}
-
-    def read_then_race(spark_, table_path, version=None):
-        out = real_read(spark_, table_path, version)
-        if not raced["done"]:
-            raced["done"] = True
-            # the raced merge lands AFTER the compaction captured its
-            # parent but BEFORE its overwrite commits
-            merge_counter_epoch(spark_, table_path, d1, 1, keys=["row", "col"])
-        return out
-
-    versioned.read_snapshot, orig = read_then_race, versioned.read_snapshot
-    try:
-        with pytest.raises(versioned.ConcurrentWriteError):
-            compact_counter_state(spark, table, keys=["row", "col"])
-    finally:
-        versioned.read_snapshot = orig
-
-    # the raced epoch's counts were NOT discarded
-    totals = {
-        (r["row"], r["col"]): r["cnt"]
-        for r in read_counter_state(spark, table, keys=["row", "col"]).collect()
-    }
-    assert totals == {(0, 1): 15, (0, 2): 20}
-    # and epoch-1 replay still short-circuits (max epoch_id survived)
-    merge_counter_epoch(spark, table, d1, 1, keys=["row", "col"])
-    totals2 = {
-        (r["row"], r["col"]): r["cnt"]
-        for r in read_counter_state(spark, table, keys=["row", "col"]).collect()
-    }
-    assert totals2 == totals
-
-
-def test_compact_counter_state_unraced_still_works(spark, tmp_path):
-    from fhir_etl_spark.sinks.versioned import snapshot_history
-    from fhir_etl_spark.streaming.dedup import (
-        compact_counter_state,
-        merge_counter_epoch,
-        read_counter_state,
-    )
-
-    table = str(tmp_path / "cms_state")
-    for epoch in range(3):
-        d = spark.createDataFrame([(0, 1, 1)], "row int, col int, cnt long")
-        merge_counter_epoch(spark, table, d, epoch, keys=["row", "col"])
-    compact_counter_state(spark, table, keys=["row", "col"])
-    rows = read_counter_state(spark, table, keys=["row", "col"]).collect()
-    assert [(r["row"], r["col"], r["cnt"]) for r in rows] == [(0, 1, 3)]
-    assert snapshot_history(table)[-1]["mode"] == "overwrite"
-
-
-# --- 2: broadcast allowlist scoping ---------------------------------------
+# --- 1: broadcast allowlist scoping ---------------------------------------
 
 
 def _audit_sets():
@@ -122,7 +49,7 @@ def test_generic_names_are_scoped_not_global():
         assert f"broadcast({name}" in (root / rel).read_text(), (rel, name)
 
 
-# --- 3: c6 chunk-id packing guard -----------------------------------------
+# --- 2: c6 chunk-id packing guard -----------------------------------------
 
 
 def test_chunk_pack_within_contract(spark):

@@ -263,3 +263,30 @@ def test_cli_compact_zorder_reject_in_place_rewrite(tmp_path):
     ):
         with pytest.raises(SystemExit, match="must differ"):
             cli.main(argv)
+
+
+@pytest.mark.parametrize(
+    "pipeline, message",
+    [
+        ("gtex", "--subjects, --samples, --filelist, --annotations required"),
+        ("1kgenomes", "--sample-info required"),
+    ],
+    ids=["gtex", "1kgenomes"],
+)
+def test_cli_transform_missing_inputs_is_a_usage_error(
+    pipeline, message, tmp_path, monkeypatch, capsys
+):
+    """A transform without its pipeline's inputs is an argument error
+    (exit 2, message on stderr), checked before any Spark session starts
+    — not an assert that ``python -O`` strips."""
+    from fhir_etl_spark import cli, session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a Spark session was requested")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        cli.main(["transform", "-p", pipeline, "--meta-dir", str(tmp_path / "meta")])
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    assert f"transform -p {pipeline}: {message}" in err

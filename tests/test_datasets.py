@@ -125,48 +125,6 @@ def test_shard_shuffle_no_global_sort(spark, sf_dir):
     assert len(shuffles) == 1, plan
 
 
-def test_split_and_sample_are_stream_compatible(spark, sf_dir):
-    """split/sample are pure narrow plans, so the SAME operators run
-    unchanged under readStream — author once, run either mode (the
-    engine-wide batch/stream contract, cf. streaming/windows.py)."""
-    from fhir_etl_spark.streaming.windows import stream_events
-
-    events = stream_events(spark, sf_dir)
-    sampled = stratified_sample(
-        split_assign(events, "event_id", {"train": 0.9, "test": 0.1}),
-        "event_type",
-        "event_id",
-        {"error": 1.0},
-        default_fraction=0.0,
-    )
-    q = (
-        sampled.writeStream.format("memory")
-        .queryName("ds_stream_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["event_id"], r["split"])
-        for r in spark.sql("SELECT event_id, split FROM ds_stream_out").collect()
-    }
-    # batch twin over the same data
-    from fhir_etl_spark.session import load_tables
-
-    batch = stratified_sample(
-        split_assign(
-            load_tables(spark, sf_dir, "events"), "event_id", {"train": 0.9, "test": 0.1}
-        ),
-        "event_type",
-        "event_id",
-        {"error": 1.0},
-        default_fraction=0.0,
-    )
-    want = {(r["event_id"], r["split"]) for r in batch.select("event_id", "split").collect()}
-    assert got == want and got
-
-
 def test_leakage_safe_split_keeps_clusters_together(spark, sf_dir):
     """Every member of a near-dup cluster must receive the SAME split —
     the whole point of the cluster-aware key (a per-row split can put one

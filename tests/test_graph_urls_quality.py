@@ -427,6 +427,24 @@ class TestStupidBackoff:
         assert got[2] == (1, 1, 200_000)
         assert got[3] == (1, 1, 0)
 
+    def test_null_reference_text_counts_no_tokens_with_ansi_off(self, spark):
+        """N counts the exploded reference tokens; a NULL text has none.
+        With ANSI off size(NULL) is -1, which must not leak into N."""
+        from fhir_etl_spark.operators.text import stupid_backoff_score
+
+        ref = spark.createDataFrame(
+            [(100, "a b a b a c"), (101, None)], "doc_id long, text string"
+        )
+        docs = spark.createDataFrame([(2, "c a")], "doc_id long, text string")
+        before = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        try:
+            (row,) = stupid_backoff_score(docs, ref).collect()
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", before)
+        # backoff on a with N=6: 2*3*1e6 DIV 30 (N=5 would give 240000)
+        assert row["score_micro"] == 200_000
+
     def test_empty_reference_raises(self, spark):
         from fhir_etl_spark.operators.text import stupid_backoff_score
 

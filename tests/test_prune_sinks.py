@@ -117,3 +117,33 @@ def test_upsert_explicit_order_col_survives_shuffle(spark, tmp_path):
     data = _read_file(f"{folder}/Patient.ndjson")
     assert data["c"]["v"] == "v2"  # last arrival wins in update mode
     assert data["d"]["v"] == "x"
+
+
+def test_write_lines_failed_publish_keeps_old_file(spark, tmp_path, monkeypatch):
+    """The publish is one os.replace from a staging directory inside the
+    target folder: if it fails, the old file is intact and no staging
+    directory is left behind."""
+    import os
+
+    import pytest
+
+    from fhir_etl_spark.sinks import ndjson
+
+    target = tmp_path / "Patient.ndjson"
+    target.write_bytes(b'{"id":"old"}\n')
+
+    def fail_replace(src, dst):
+        raise OSError("simulated crash at publish")
+
+    monkeypatch.setattr(ndjson.os, "replace", fail_replace)
+    lines = spark.createDataFrame([('{"id":"new"}',)], "json string")
+    with pytest.raises(OSError, match="simulated crash"):
+        ndjson.write_lines(lines, str(tmp_path), "Patient")
+    monkeypatch.undo()
+
+    assert target.read_bytes() == b'{"id":"old"}\n'
+    assert os.listdir(tmp_path) == ["Patient.ndjson"]
+
+    ndjson.write_lines(lines, str(tmp_path), "Patient")
+    assert target.read_bytes() == b'{"id":"new"}\n'
+    assert os.listdir(tmp_path) == ["Patient.ndjson"]

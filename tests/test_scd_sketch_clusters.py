@@ -572,6 +572,24 @@ def test_kmv_merge_mixed_k_detected_despite_shared_entries(spark):
         kmv_merge(s8.unionByName(s16), ["g"]).collect()
 
 
+def test_kmv_merge_replay_idempotent(spark):
+    """Folding the SAME sketch in twice must be a no-op (dedup on hashed
+    row identity before the min-k rank — a multiset rank would
+    double-count)."""
+    from fhir_etl_spark.operators.sketch import kmv_merge, kmv_sample_sketch
+
+    df = spark.range(500).selectExpr(
+        "'g' AS g", "id AS rid", "cast(id * 13 % 500 as double) AS v"
+    )
+    sk = kmv_sample_sketch(df, ["g"], "v", ["rid"], k=32)
+
+    def rows(s):
+        return {r["g"]: [(e["h"], e["v"]) for e in r["sample"]] for r in s.collect()}
+
+    replayed = kmv_merge(sk.unionByName(sk), ["g"], k=32)
+    assert rows(replayed) == rows(sk)
+
+
 class TestCountMinSketch:
     def test_estimate_never_undercounts_and_is_exact_without_collisions(
         self, spark

@@ -199,179 +199,6 @@ def test_events_ts_loads_as_ltz_timestamp(spark, sf_dir):
     ).limit(1).collect()
 
 
-def test_parquet_replay_streaming_source(spark, sf_dir):
-    """The streaming replay DataSource plays a parquet table back as
-    micro-batches with executor-parallel row-slice partitions; the full
-    replay must deliver every row exactly once."""
-    import time
-
-    from fhir_etl_spark.sources.replay import ParquetReplayDataSource
-
-    spark.dataSource.register(ParquetReplayDataSource)
-    path = f"{sf_dir}/region.parquet"
-    expected = spark.read.parquet(path).count()
-
-    stream = (
-        spark.readStream.format("parquet_replay")
-        .option("path", path)
-        .option("rows_per_batch", 2)
-        .option("num_partitions", 2)
-        .load()
-    )
-    assert stream.isStreaming
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("replay_out")
-        .outputMode("append")
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            got = spark.sql("SELECT count(*) n FROM replay_out").first()["n"]
-            if got >= expected:
-                break
-            time.sleep(0.5)
-        assert got == expected, (got, expected)
-        # exactly-once: no duplicate keys
-        dup = spark.sql(
-            "SELECT r_regionkey FROM replay_out GROUP BY 1 HAVING count(*) > 1"
-        ).count()
-        assert dup == 0
-    finally:
-        q.stop()
-
-
-def test_parquet_replay_restart_exactly_once(spark, sf_dir, tmp_path):
-    """Stop the replay stream mid-table, restart from the checkpoint:
-    deterministic row-range offsets + the transactional file sink must
-    deliver every row exactly once across the restart (the
-    replayable-source contract)."""
-    import time
-
-    from fhir_etl_spark.sources.replay import ParquetReplayDataSource
-
-    spark.dataSource.register(ParquetReplayDataSource)
-    path = f"{sf_dir}/nation.parquet"
-    expected = spark.read.parquet(path).count()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    def start():
-        return (
-            spark.readStream.format("parquet_replay")
-            .option("path", path)
-            .option("rows_per_batch", 5)
-            .option("num_partitions", 2)
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="150 milliseconds")
-            .start()
-        )
-
-    def rows_out() -> int:
-        try:
-            return spark.read.parquet(out).count()
-        except Exception:
-            return 0  # sink dir not committed yet
-
-    q = start()
-    try:
-        deadline = time.time() + 30
-        while time.time() < deadline and rows_out() < 5:
-            time.sleep(0.2)
-    finally:
-        q.stop()
-
-    q2 = start()
-    try:
-        deadline = time.time() + 60
-        got = 0
-        while time.time() < deadline:
-            got = rows_out()
-            if got >= expected:
-                break
-            time.sleep(0.5)
-        assert got == expected, (got, expected)
-        dup = (
-            spark.read.parquet(out)
-            .groupBy("n_nationkey")
-            .count()
-            .filter("count > 1")
-            .count()
-        )
-        assert dup == 0
-    finally:
-        q2.stop()
-
-
-def test_parquet_replay_fully_committed_restart_no_duplicates(
-    spark, sf_dir, tmp_path
-):
-    """Run the replay table TO COMPLETION, then restart from the same
-    checkpoint: a fresh reader must seed its high-water mark from the
-    replayed partitions()/commit() calls (the restart-safety contract
-    documented on those methods) and emit ZERO additional rows — a
-    latestOffset falling behind the offset log here would re-deliver the
-    whole table."""
-    import time
-
-    from fhir_etl_spark.sources.replay import ParquetReplayDataSource
-
-    spark.dataSource.register(ParquetReplayDataSource)
-    path = f"{sf_dir}/region.parquet"
-    expected = spark.read.parquet(path).count()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    def start():
-        return (
-            spark.readStream.format("parquet_replay")
-            .option("path", path)
-            .option("rows_per_batch", 2)
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-
-    def rows_out() -> int:
-        try:
-            return spark.read.parquet(out).count()
-        except Exception:
-            return 0
-
-    q = start()
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline and rows_out() < expected:
-            time.sleep(0.3)
-        assert rows_out() == expected
-    finally:
-        q.stop()
-
-    # restart after full commit: give it a few triggers, expect no growth
-    q2 = start()
-    try:
-        time.sleep(3)
-        assert rows_out() == expected, "fully-committed restart re-emitted rows"
-        dup = (
-            spark.read.parquet(out)
-            .groupBy("r_regionkey")
-            .count()
-            .filter("count > 1")
-            .count()
-        )
-        assert dup == 0
-    finally:
-        q2.stop()
-
-
 # --------------------------------------------------------------------------
 # WARC source (sources/warc.py, round 5)
 # --------------------------------------------------------------------------

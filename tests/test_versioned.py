@@ -168,56 +168,6 @@ def test_errors(spark, tmp_path):
         write_snapshot(_df(spark, [1]), str(tmp_path / "t"), mode="merge")
 
 
-def test_streaming_foreachbatch_snapshots(spark, sf_dir, tmp_path):
-    """Streaming → versioned table: each micro-batch commits one append
-    snapshot via foreachBatch, so the table's history IS the batch
-    sequence — time travel to any prefix of the stream, and the final
-    snapshot holds exactly the replayed rows."""
-    import time
-
-    from fhir_etl_spark.sources.replay import ParquetReplayDataSource
-
-    spark.dataSource.register(ParquetReplayDataSource)
-    src = f"{sf_dir}/region.parquet"
-    expected = spark.read.parquet(src).count()
-    table = str(tmp_path / "versioned_stream")
-
-    def commit_batch(df, _batch_id):
-        if df.count() > 0:
-            write_snapshot(df, table, mode="append")
-
-    q = (
-        spark.readStream.format("parquet_replay")
-        .option("path", src)
-        .option("rows_per_batch", 2)
-        .load()
-        .writeStream.foreachBatch(commit_batch)
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            try:
-                if read_snapshot(spark, table).count() >= expected:
-                    break
-            except FileNotFoundError:
-                pass
-            time.sleep(0.5)
-    finally:
-        q.stop()
-
-    final = read_snapshot(spark, table)
-    assert final.count() == expected
-    assert final.select("r_regionkey").distinct().count() == expected
-
-    hist = snapshot_history(table)
-    assert len(hist) >= 2 and all(h["mode"] == "append" for h in hist)
-    # time travel: version v holds the first v+1 batches — strictly growing
-    counts = [read_snapshot(spark, table, h["version"]).count() for h in hist]
-    assert counts == sorted(counts) and counts[-1] == expected
-
-
 def test_schema_evolution_additive(spark, tmp_path):
     """Append with a NEW nullable column: old files surface it as NULL
     under the evolved manifest schema; time travel to the pre-evolution
