@@ -96,7 +96,7 @@ def main(argv: list[str] | None = None) -> int:
         # path for both would delete the source mid-read ("never rewrite
         # in place" — operators/maintenance.compact docstring)
         if os.path.realpath(args.src) == os.path.realpath(args.dest):
-            raise SystemExit(
+            parser.error(
                 f"{args.command}: --dest must differ from --src "
                 f"({args.src!r}): the rewrite overwrites dest while src is "
                 "still being read lazily"

@@ -20,10 +20,11 @@ def vcf_header_sample_ids(spark: SparkSession, header_path: str) -> DataFrame:
     '#CHROM' line, split on tab, keep columns 10+; hard error when absent)."""
     lines = spark.read.text(header_path)
     chrom = lines.filter(F.col("value").startswith("#CHROM"))
-    if chrom.isEmpty():
-        raise ValueError("Could not find the '#CHROM' header line in the header file.")
     cols = chrom.select(F.split(F.trim(F.col("value")), "\t").alias("cols"))
-    if cols.select(F.size("cols").alias("n")).first()["n"] <= 9:
+    first = cols.select(F.size("cols").alias("n")).first()  # one job, both checks
+    if first is None:
+        raise ValueError("Could not find the '#CHROM' header line in the header file.")
+    if first["n"] <= 9:
         raise ValueError("Expected sample IDs after the first 9 columns, but found none.")
     return cols.select(
         F.explode(F.slice(F.col("cols"), 10, F.size("cols") - 9)).alias("sample_id")

@@ -21,6 +21,25 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def _is_empty(col: Column, dtype: T.DataType) -> Column:
+    """True exactly where :func:`_prune` returns NULL; never NULL itself.
+    Its size is linear in the subtree, and :func:`_prune` builds each child
+    once besides it, so the pruned expression is O(fields × depth) rather
+    than doubling at every nesting level."""
+    if isinstance(dtype, T.StringType):
+        return col.isNull() | (col == "")
+    if isinstance(dtype, T.ArrayType):
+        # forall over [] is true: a list of only empties prunes to None
+        return col.isNull() | F.forall(col, lambda x: _is_empty(x, dtype.elementType))
+    if isinstance(dtype, T.StructType):
+        all_empty = None
+        for f in dtype.fields:
+            field_empty = _is_empty(col.getField(f.name), f.dataType)
+            all_empty = field_empty if all_empty is None else (all_empty & field_empty)
+        return col.isNull() | all_empty
+    return col.isNull()
+
+
 def _prune(col: Column, dtype: T.DataType) -> Column:
     if isinstance(dtype, T.StringType):
         return F.when(col != "", col)  # '' and NULL both → NULL
@@ -29,7 +48,7 @@ def _prune(col: Column, dtype: T.DataType) -> Column:
             F.transform(col, lambda x: _prune(x, dtype.elementType)),
             lambda x: x.isNotNull(),
         )
-        return F.when(col.isNotNull() & (F.size(pruned_elems) > 0), pruned_elems)
+        return F.when(~_is_empty(col, dtype), pruned_elems)
     if isinstance(dtype, T.StructType):
         rebuilt = F.struct(
             *[
@@ -37,11 +56,7 @@ def _prune(col: Column, dtype: T.DataType) -> Column:
                 for f in dtype.fields
             ]
         )
-        any_set = None
-        for f in dtype.fields:
-            field_set = _prune(col.getField(f.name), f.dataType).isNotNull()
-            any_set = field_set if any_set is None else (any_set | field_set)
-        return F.when(col.isNotNull() & any_set, rebuilt)
+        return F.when(~_is_empty(col, dtype), rebuilt)
     # numeric / boolean / binary / timestamp: kept as-is (0 and False survive)
     return col
 

@@ -93,17 +93,28 @@ def transform_gtex(
     writes the distributed ``group_membership.parquet`` table plus the
     Group shell instead — see pipelines/onekg.transform_1k_files for the
     full rationale.
+
+    Each REST source feeds two outputs (subjects: Patient and
+    ResearchSubject; samples: Specimen and the Group membership), so both
+    are cached for the call: the first write that reads one scans it at its
+    own partitioning and fills the cache, the second reads the cache. Both
+    are unpersisted before returning.
     """
-    files = explode_filelist(filelist)
-    members = gtex_group_members(samples, annotations)
-    if scale_mode:
-        write_group_membership(members, GTEX_GROUP_ID, meta_dir)
-    outputs = {
-        "Patient": fhirize_patient_gtex(subjects),
-        "ResearchSubject": fhirize_research_subject_gtex(subjects),
-        "Specimen": fhirize_specimen_gtex(samples),
-        "DocumentReference": fhirize_document_reference_gtex(files),
-        "ResearchStudy": research_study_gtex(spark),
-        "Group": group_gtex(members, include_member=not scale_mode),
-    }
-    return {rtype: write_ndjson(df, meta_dir, rtype) for rtype, df in outputs.items()}
+    subjects, samples = subjects.cache(), samples.cache()
+    try:
+        files = explode_filelist(filelist)
+        members = gtex_group_members(samples, annotations)
+        if scale_mode:
+            write_group_membership(members, GTEX_GROUP_ID, meta_dir)
+        outputs = {
+            "Patient": fhirize_patient_gtex(subjects),
+            "ResearchSubject": fhirize_research_subject_gtex(subjects),
+            "Specimen": fhirize_specimen_gtex(samples),
+            "DocumentReference": fhirize_document_reference_gtex(files),
+            "ResearchStudy": research_study_gtex(spark),
+            "Group": group_gtex(members, include_member=not scale_mode),
+        }
+        return {rtype: write_ndjson(df, meta_dir, rtype) for rtype, df in outputs.items()}
+    finally:
+        subjects.unpersist()
+        samples.unpersist()

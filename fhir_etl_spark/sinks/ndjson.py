@@ -2,11 +2,13 @@
 
 The reference writes one JSON object per line per resource type
 (output_to_ndjson, oneKg_fhirizer.py:49-62): ``{folder}/{ResourceType}.ndjson``,
-one file. Here that is a ``coalesce(1)`` text write staged next to the
-target and renamed into place — a deliberate single-writer ceiling that
-keeps the reference's layout for golden diffs. ``write_lines`` is that
-write, shared by ``write_ndjson`` and the upsert sink
-(sinks/upsert.create_or_extend).
+one file, in input order. Here that is an order-carrying gather: every
+line gets an order key, one shuffle moves them to a single partition, which
+sorts by the key and writes one part, staged next to the target and renamed
+into place. Only that last task is single; everything upstream of it
+(source scans, fhirize, prune, ``to_json``) runs at the plan's own
+parallelism. ``write_lines`` is that write, shared by ``write_ndjson`` and
+the upsert sink (sinks/upsert.create_or_extend).
 
 Serialization happens exactly once (`to_json` on the struct column) — the
 reference round-trips JSON 2-3× per row (utils.py:220-228); the engine IR
@@ -45,18 +47,31 @@ def serialize_keeping(resources: DataFrame, col_name: str = "resource") -> DataF
     ).drop(col_name)
 
 
-def write_lines(lines: DataFrame, folder_path: str, resource_type: str) -> str:
+def write_lines(
+    lines: DataFrame, folder_path: str, resource_type: str, order_col: str | None = None
+) -> str:
     """Write the one string column of ``lines`` as ``{folder}/{ResourceType}.ndjson``
-    without collecting to the driver: stage a single-part text write in a
-    hidden directory inside ``folder_path``, then publish the part with one
-    ``os.replace`` — a rename on the same filesystem, so after a crash the
-    old file or the new one is in place, never a torn one. Returns the path."""
+    without collecting to the driver, in the order of ``order_col`` (a
+    column of ``lines`` that is dropped before the write). Without it the
+    key is ``monotonically_increasing_id()``: partition-major, the order a
+    single reader of the plan's partitions sees. ``repartition(1)`` +
+    ``sortWithinPartitions`` rather than ``orderBy``, whose range
+    partitioning would add a sampling job.
+
+    The part is staged in a hidden directory inside ``folder_path`` and
+    published with one ``os.replace`` — a rename on the same filesystem, so
+    after a crash the old file or the new one is in place, never a torn
+    one. Returns the path."""
+    if order_col is None:
+        order_col = "_order"
+        lines = lines.withColumn(order_col, F.monotonically_increasing_id())
+    gathered = lines.repartition(1).sortWithinPartitions(order_col).drop(order_col)
     os.makedirs(folder_path, exist_ok=True)
     target = os.path.join(folder_path, f"{resource_type}.ndjson")
     staging = tempfile.mkdtemp(prefix=f".{resource_type}.", dir=folder_path)
     try:
         out = os.path.join(staging, "out")
-        lines.coalesce(1).write.text(out)
+        gathered.write.text(out)
         parts = sorted(glob.glob(os.path.join(out, "part-*")))
         assert len(parts) == 1, f"expected one part file, got {parts}"
         os.replace(parts[0], target)

@@ -7,15 +7,22 @@ into {id: obj}, fold new items in — skipping ids that already exist unless
 - insert-only: existing wins; among duplicate NEW ids, the FIRST wins
 - update:      new wins;      among duplicate NEW ids, the LAST wins
 
-Expressed as anti-join + unionByName over JSON lines keyed by id, then the
-NDJSON sink's single-file write (sinks/ndjson.write_lines).
+and the file comes out in the dict's insertion order: existing lines stay
+in file order (an updated id keeps its place), new ids follow in order of
+first arrival. Lines the dict could not key (no id, invalid JSON) and
+repeated existing ids keep their place too — every existing line is kept.
+
+Expressed as one full outer join of the existing lines with the
+deduplicated new ones on id, and an explicit order key that the NDJSON sink's
+single-file gather sorts by (sinks/ndjson.write_lines), so the bytes do not
+depend on partitioning or core count.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fhir_etl_spark.schemas.systems import SUPPORTED_RESOURCE_TYPES
@@ -27,7 +34,8 @@ def _keyed_json(
 ) -> DataFrame:
     """(id, json, _seq) from a resource-struct DataFrame.
 
-    ``_seq`` drives duplicate-id precedence. With ``order_col`` it is that
+    ``_seq`` is arrival order: it drives duplicate-id precedence and the
+    order new ids are appended in. With ``order_col`` it is that
     column (explicit, shuffle-safe). Otherwise it falls back to
     ``monotonically_increasing_id()``, which numbers rows PARTITION-MAJOR —
     it equals arrival order only while partition order equals row order
@@ -42,6 +50,14 @@ def _keyed_json(
     return keyed.select(
         F.get_json_object("json", "$.id").alias("id"), "json", "_seq"
     )
+
+
+def _order_key(block: int, pos: Column) -> Column:
+    """``(block, pos)``: block 0 holds the existing lines by file position
+    (``monotonically_increasing_id`` over the one-file read is partition-
+    major, and the file's splits are its partitions in file order), block 1
+    the new ids by first arrival."""
+    return F.struct(F.lit(block).alias("block"), pos.alias("pos"))
 
 
 def create_or_extend(
@@ -63,24 +79,27 @@ def create_or_extend(
     )
     file_path = os.path.join(folder_path, f"{resource_type}.ndjson")
     new = _keyed_json(new_items, col_name, order_col)
-    # duplicate-id precedence among new rows: first wins (insert-only) /
-    # last wins (update mode) — utils.py:120-122 dict-overwrite order
-    order = F.col("_seq").asc() if not update_existing else F.col("_seq").desc()
-    w = Window.partitionBy("id").orderBy(order)
-    new_deduped = (
-        new.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn", "_seq")
+    # one row per new id, at its first arrival, holding the winning line:
+    # first wins (insert-only) / last wins (update mode) — utils.py:120-122
+    # dict-overwrite order
+    pick = F.max_by if update_existing else F.min_by
+    new_deduped = new.groupBy("id").agg(
+        pick("json", "_seq").alias("_new"), _order_key(1, F.min("_seq")).alias("_new_order")
     )
 
     if os.path.exists(file_path):
         existing = spark.read.text(file_path).select(
-            F.get_json_object("value", "$.id").alias("id"), F.col("value").alias("json")
+            F.get_json_object("value", "$.id").alias("id"),
+            F.col("value").alias("_old"),
+            _order_key(0, F.monotonically_increasing_id()).alias("_old_order"),
         )
-        if update_existing:
-            merged = existing.join(new_deduped, "id", "left_anti").unionByName(new_deduped)
-        else:
-            merged = existing.unionByName(new_deduped.join(existing, "id", "left_anti"))
+        # NULL ids never match, so unkeyed lines on either side pass through
+        both = existing.join(new_deduped, "id", "full")
+        line = F.coalesce("_new", "_old") if update_existing else F.coalesce("_old", "_new")
+        order = F.coalesce("_old_order", "_new_order")
     else:
-        merged = new_deduped
+        both, line, order = new_deduped, F.col("_new"), F.col("_new_order")
 
     # rewrite the whole file (same contract as the reference)
-    return write_lines(merged.select("json"), folder_path, resource_type)
+    lines = both.select(line.alias("json"), order.alias("_order"))
+    return write_lines(lines, folder_path, resource_type, "_order")

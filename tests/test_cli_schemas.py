@@ -247,22 +247,29 @@ def test_cli_compact_and_zorder(spark, sf_dir, tmp_path):
     assert spark.read.parquet(dest_z).count() == spark.read.parquet(src).count()
 
 
-def test_cli_compact_zorder_reject_in_place_rewrite(tmp_path):
+def test_cli_compact_zorder_reject_in_place_rewrite(tmp_path, monkeypatch, capsys):
     """compact/zorder overwrite --dest while lazily reading --src: the
     same (normalized) path for both would delete the source mid-read, so
-    the CLI must refuse before any Spark work starts."""
+    the CLI must refuse with a usage error (exit 2, message on stderr)
+    before any Spark session starts."""
     import pytest
 
-    from fhir_etl_spark import cli
+    from fhir_etl_spark import cli, session
 
+    def no_session(*args, **kwargs):
+        raise AssertionError("a Spark session was requested")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
     src = str(tmp_path / "data")
     alias = str(tmp_path / "x" / ".." / "data")  # same path, unnormalized
     for argv in (
         ["compact", "--src", src, "--dest", src],
         ["zorder", "--src", src, "--dest", alias, "--cols", "a"],
     ):
-        with pytest.raises(SystemExit, match="must differ"):
+        with pytest.raises(SystemExit) as exc:
             cli.main(argv)
+        assert exc.value.code == 2
+        assert f"{argv[0]}: --dest must differ from --src" in capsys.readouterr().err
 
 
 @pytest.mark.parametrize(

@@ -1,6 +1,7 @@
 """Fixture-free output pins for the FHIR output path: the exact Group JSON
 of both cohorts (full and shell form) and the exact bytes the NDJSON sink
-and both upsert modes write. The golden-parity suites need the reference
+and both upsert modes write — the upsert's against a Python dict model of
+the reference's. The golden-parity suites need the reference
 checkout; these need nothing, so any refactor of the sinks or the Group
 builders is checked byte-for-byte on every machine."""
 
@@ -120,60 +121,72 @@ def test_write_ndjson_exact_bytes(spark, tmp_path):
     )
 
 
+def _upsert_model(existing: list[dict], new: list[dict], update_existing: bool) -> bytes:
+    """The reference's create_or_extend (utils.py:101-135) as a Python dict:
+    existing objects keyed by id in file order, new ones folded in — an
+    existing id is overwritten only in update mode, where it keeps its
+    place — and the dict written back in insertion order."""
+    store = {obj["id"]: obj for obj in existing}
+    for obj in new:
+        if update_existing or obj["id"] not in store:
+            store[obj["id"]] = obj
+    return b"".join(_line(obj).encode() + b"\n" for obj in store.values())
+
+
+def _obj(id_, v, n) -> dict:
+    """A row of ``_resources`` as the sink writes it ('' and null pruned)."""
+    return {k: x for k, x in (("id", id_), ("v", v), ("n", n)) if x not in ("", None)}
+
+
 def test_create_or_extend_exact_bytes(spark, tmp_path):
     folder = str(tmp_path)
-    write_ndjson(
-        _resources(spark, [("a", "1", 0), ("b", "", None), ("c", "x", 3)]), folder, "Patient"
-    )
+    first = [("a", "1", 0), ("b", "", None), ("c", "x", 3)]
+    write_ndjson(_resources(spark, first), folder, "Patient")
     # insert-only: existing 'a' kept, first of the duplicate new 'd' wins
-    out = create_or_extend(
-        spark,
-        _resources(spark, [("a", "2", 1), ("d", "first", 1), ("d", "second", 2)]),
-        folder,
-        "Patient",
-    )
+    batch = [("a", "2", 1), ("d", "first", 1), ("d", "second", 2)]
+    out = create_or_extend(spark, _resources(spark, batch), folder, "Patient")
     assert out == str(tmp_path / "Patient.ndjson")
-    assert _bytes(out) == (
-        b'{"id":"d","v":"first","n":1}\n{"id":"a","v":"1","n":0}\n'
-        b'{"id":"b"}\n{"id":"c","v":"x","n":3}\n'
+    expected = _upsert_model([_obj(*r) for r in first], [_obj(*r) for r in batch], False)
+    assert _bytes(out) == expected == (
+        b'{"id":"a","v":"1","n":0}\n{"id":"b"}\n'
+        b'{"id":"c","v":"x","n":3}\n{"id":"d","v":"first","n":1}\n'
     )
-    # update: new 'a' replaces the old one, last of the duplicate new 'd' wins
-    create_or_extend(
-        spark,
-        _resources(spark, [("a", "3", 1), ("d", "x", 1), ("d", "y", 2)]),
-        folder,
-        "Patient",
-        update_existing=True,
-    )
-    assert _bytes(out) == (
-        b'{"id":"b"}\n{"id":"c","v":"x","n":3}\n'
-        b'{"id":"a","v":"3","n":1}\n{"id":"d","v":"y","n":2}\n'
+    # update: new 'a' replaces the old one in place, last of the duplicate
+    # new 'd' wins
+    update = [("a", "3", 1), ("d", "x", 1), ("d", "y", 2)]
+    create_or_extend(spark, _resources(spark, update), folder, "Patient", update_existing=True)
+    previous = [json.loads(line) for line in expected.splitlines()]
+    assert _bytes(out) == _upsert_model(previous, [_obj(*r) for r in update], True) == (
+        b'{"id":"a","v":"3","n":1}\n{"id":"b"}\n'
+        b'{"id":"c","v":"x","n":3}\n{"id":"d","v":"y","n":2}\n'
     )
     assert sorted(p.name for p in tmp_path.iterdir()) == ["Patient.ndjson"]
 
 
 def test_create_or_extend_creates_missing_file_exact_bytes(spark, tmp_path):
     folder = str(tmp_path / "new")
-    out = create_or_extend(
-        spark,
-        _resources(spark, [("b", "1", 1), ("a", "first", 1), ("a", "second", 2)]),
-        folder,
-        "Specimen",
-    )
+    batch = [("b", "1", 1), ("a", "first", 1), ("a", "second", 2)]
+    out = create_or_extend(spark, _resources(spark, batch), folder, "Specimen")
     assert out == f"{folder}/Specimen.ndjson"
-    assert _bytes(out) == b'{"id":"a","v":"first","n":1}\n{"id":"b","v":"1","n":1}\n'
+    assert _bytes(out) == _upsert_model([], [_obj(*r) for r in batch], False) == (
+        b'{"id":"b","v":"1","n":1}\n{"id":"a","v":"first","n":1}\n'
+    )
 
 
 def test_create_or_extend_order_col_exact_bytes(spark, tmp_path):
-    """The order column decides precedence and never reaches the file."""
-    rows = spark.createDataFrame(
-        [("a", "late", 2, 9), ("a", "early", 1, 3), ("b", "", 5, 1)],
-        "id string, v string, n int, arrival int",
-    ).select(F.struct("id", "v", "n").alias("resource"), "arrival")
-    folder = str(tmp_path)
-    out = create_or_extend(spark, rows, folder, "Patient", order_col="arrival")
-    assert _bytes(out) == b'{"id":"a","v":"early","n":1}\n{"id":"b","n":5}\n'
-    out = create_or_extend(
-        spark, rows, folder, "Patient", update_existing=True, order_col="arrival"
+    """The order column decides precedence and arrival order and never
+    reaches the file."""
+    rows = [("a", "late", 2, 9), ("a", "early", 1, 3), ("b", "", 5, 1)]
+    df = spark.createDataFrame(rows, "id string, v string, n int, arrival int").select(
+        F.struct("id", "v", "n").alias("resource"), "arrival"
     )
-    assert _bytes(out) == b'{"id":"a","v":"late","n":2}\n{"id":"b","n":5}\n'
+    arrived = [_obj(*r[:3]) for r in sorted(rows, key=lambda r: r[3])]
+    folder = str(tmp_path)
+    out = create_or_extend(spark, df, folder, "Patient", order_col="arrival")
+    inserted = _upsert_model([], arrived, False)
+    assert _bytes(out) == inserted == b'{"id":"b","n":5}\n{"id":"a","v":"early","n":1}\n'
+    out = create_or_extend(spark, df, folder, "Patient", update_existing=True, order_col="arrival")
+    previous = [json.loads(line) for line in inserted.splitlines()]
+    assert _bytes(out) == _upsert_model(previous, arrived, True) == (
+        b'{"id":"b","n":5}\n{"id":"a","v":"late","n":2}\n'
+    )

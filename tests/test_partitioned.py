@@ -86,7 +86,7 @@ def test_validation_errors(spark):
         write_partitioned(df, "/tmp/x", ["nope"])
 
 
-def test_cli_partition_verb(spark, tmp_path):
+def test_cli_partition_verb(spark, tmp_path, capsys):
     """CLI plumbing for the partitioned sink, incl. the src==dest guard."""
     import pytest
 
@@ -101,5 +101,7 @@ def test_cli_partition_verb(spark, tmp_path):
     assert {d for d in os.listdir(dest) if d.startswith("part=")} == {
         "part=a", "part=b"
     }
-    with pytest.raises(SystemExit):
+    with pytest.raises(SystemExit) as exc:
         cli.main(["partition", "--src", src, "--dest", src, "--cols", "part"])
+    assert exc.value.code == 2
+    assert "partition: --dest must differ from --src" in capsys.readouterr().err

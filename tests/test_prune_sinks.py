@@ -58,6 +58,36 @@ def test_prune_recurses_nested(spark):
     assert out == {"nested_kept": {"inner": {"v": "deep"}}}
 
 
+def _chain_schema(depth):
+    """A struct chain ``depth`` levels deep; every level holds a string, a
+    long, an array of structs and the next level."""
+    from pyspark.sql import types as T
+
+    leaf = T.StructType([T.StructField("s", T.StringType()), T.StructField("n", T.LongType())])
+    level = leaf
+    for _ in range(depth):
+        level = T.StructType([
+            T.StructField("s", T.StringType()),
+            T.StructField("n", T.LongType()),
+            T.StructField("items", T.ArrayType(leaf)),
+            T.StructField("child", level),
+        ])
+    return T.StructType([T.StructField("resource", level)])
+
+
+def test_prune_plan_grows_polynomially_with_depth(spark):
+    """Each level builds its children once (plus a linear emptiness test),
+    so doubling the depth may not multiply the pruned plan by more than 4
+    (a doubling expression per level gives ~20x here)."""
+    from fhir_etl_spark.operators.prune import prune_empty
+
+    def plan_chars(depth):
+        df = spark.createDataFrame([], _chain_schema(depth))
+        return len(prune_empty(df)._jdf.queryExecution().analyzed().toString())
+
+    assert plan_chars(8) <= 4 * plan_chars(4)
+
+
 def _resources(spark, pairs):
     return spark.createDataFrame(pairs, "id string, v string").select(
         F.struct(F.col("id"), F.col("v")).alias("resource")

@@ -1,0 +1,206 @@
+"""Output order and source reads of the FHIR output path.
+
+- The NDJSON sink and both upsert modes write the same bytes whatever the
+  shuffle-partition setting, the input's partitioning, or the number of
+  splits the existing file is read in.
+- ``transform_gtex`` reads each page of its REST sources once, and leaves
+  no cached data behind.
+- ``transform_1k_files`` returns its membership counts and raises its VCF
+  header errors as before.
+"""
+
+from __future__ import annotations
+
+import json
+from contextlib import contextmanager
+
+import pytest
+from pyspark.sql import functions as F
+
+from fhir_etl_spark.sinks.ndjson import write_ndjson
+from fhir_etl_spark.sinks.upsert import create_or_extend
+from tests.test_output_pins import _obj, _upsert_model
+
+# 40 resources, then two batches that overlap them and repeat new ids
+FIRST = [(f"e{i:02d}", f"v{i}", i) for i in range(40)]
+INSERT = [(f"e{i:02d}", "new", 0) for i in range(0, 40, 7)] + [
+    (f"n{i % 9}", f"first{i}", i) for i in range(20)
+]
+UPDATE = [(f"e{i:02d}", "upd", 1) for i in range(3, 40, 5)] + [
+    (f"m{i % 4}", f"last{i}", i) for i in range(12)
+]
+
+
+@contextmanager
+def _conf(spark, **settings):
+    old = {k: spark.conf.get(k) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def _resources(spark, rows, slices):
+    rdd = spark.sparkContext.parallelize(rows, slices)
+    return spark.createDataFrame(rdd, "id string, v string, n int").select(
+        F.struct("id", "v", "n").alias("resource")
+    )
+
+
+def _read(path) -> bytes:
+    with open(path, "rb") as f:
+        return f.read()
+
+
+def _write_all(spark, folder, slices):
+    out = [_read(write_ndjson(_resources(spark, FIRST, slices), folder, "Patient"))]
+    for batch, update in ((INSERT, False), (UPDATE, True)):
+        path = create_or_extend(
+            spark, _resources(spark, batch, slices), folder, "Patient", update_existing=update
+        )
+        out.append(_read(path))
+    return out
+
+
+def _model() -> list[bytes]:
+    """The file after each of the three writes, from the dict model."""
+    out = [_upsert_model([], [_obj(*r) for r in FIRST], False)]
+    for batch, update in ((INSERT, False), (UPDATE, True)):
+        previous = [json.loads(line) for line in out[-1].splitlines()]
+        out.append(_upsert_model(previous, [_obj(*r) for r in batch], update))
+    return out
+
+
+def test_sink_and_upsert_bytes_do_not_depend_on_partitioning(spark, tmp_path):
+    expected = _model()
+    for shuffle, slices, split in ((4, 1, "128MB"), (16, 7, "256b")):
+        folder = str(tmp_path / f"s{shuffle}_p{slices}_{split}")
+        with _conf(spark, **{"spark.sql.shuffle.partitions": str(shuffle),
+                             "spark.sql.files.maxPartitionBytes": split}):
+            got = _write_all(spark, folder, slices)
+            if split == "256b":  # the existing file is read as several splits
+                assert spark.read.text(f"{folder}/Patient.ndjson").rdd.getNumPartitions() > 1
+        assert got == expected, (shuffle, slices, split)
+
+
+def _write_pages(folder, rows, per_page):
+    folder.mkdir()
+    for p in range(0, len(rows), per_page):
+        page = {"data": rows[p : p + per_page]}
+        (folder / f"page_{p // per_page}.json").write_text(json.dumps(page))
+
+
+def test_transform_gtex_reads_each_rest_page_once(spark, tmp_path):
+    from fhir_etl_spark.pipelines.gtex import transform_gtex
+    from fhir_etl_spark.schemas.inputs import GTEX_FILELIST, GTEX_SAMPLE, GTEX_SUBJECT
+    from fhir_etl_spark.sources.rest import PaginatedRestDataSource, PaginatedRestReader
+
+    class CountingReader(PaginatedRestReader):
+        """Appends ``{fixture_dir} {page}`` to ``read_log`` per page read."""
+
+        def __init__(self, schema, options):
+            super().__init__(schema, options)
+            self.read_log = options["read_log"]
+
+        def read(self, partition):
+            with open(self.read_log, "a") as f:
+                for page in range(partition.start, partition.end):
+                    f.write(f"{self.fixture_dir} {page}\n")
+            yield from super().read(partition)
+
+    class CountingRestDataSource(PaginatedRestDataSource):
+        @classmethod
+        def name(cls):
+            return "counting_rest"
+
+        def reader(self, schema):
+            return CountingReader(schema, dict(self.options))
+
+    spark.dataSource.register(CountingRestDataSource)
+    subjects = [{"subjectId": f"GTEX-{i}", "sex": "male", "ageBracket": "20-29",
+                 "hardyScale": None} for i in range(6)]
+    samples = [{"aliquotId": f"SM-{i}", "subjectId": f"GTEX-{i % 6}", "dataType": "RNASEQ",
+                "freezeType": "Frozen", "tissueSiteDetailId": "Lung", "tissueSiteDetail": "Lung"}
+               for i in range(9)]
+    _write_pages(tmp_path / "subjects", subjects, 2)
+    _write_pages(tmp_path / "samples", samples, 3)
+    (tmp_path / "filelist.json").write_text(json.dumps({"name": "GTEx Analysis V8", "filesets": [
+        {"name": "Protected", "subpath": "p", "files": []},
+        {"name": "Expression", "subpath": "e", "files": [
+            {"name": "x.gct.gz", "release": "v8", "type": "Expression", "size": "1 MiB"}]}]}))
+    (tmp_path / "annotations.tsv").write_text(
+        "SAMPID\tSMTS\nGTEX-1-0001-SM-1\tLung\nGTEX-2-0001-SM-4\tLung\n")
+    log = tmp_path / "reads.log"
+
+    def pages(name, schema):
+        return (spark.read.format("counting_rest").option("fixture_dir", str(tmp_path / name))
+                .option("fields", ",".join(f.name for f in schema.fields))
+                .option("pages_per_partition", "1").option("read_log", str(log)).load())
+
+    persistent = len(spark.sparkContext._jsc.getPersistentRDDs())
+    meta = str(tmp_path / "meta")
+    transform_gtex(
+        spark, pages("subjects", GTEX_SUBJECT), pages("samples", GTEX_SAMPLE),
+        spark.read.schema(GTEX_FILELIST).json(str(tmp_path / "filelist.json")),
+        spark.read.option("sep", "\t").option("header", True).csv(str(tmp_path / "annotations.tsv")),
+        meta,
+    )
+    reads = sorted(log.read_text().splitlines())
+    assert reads == sorted(
+        [f"{tmp_path / 'subjects'} {p}" for p in range(3)]
+        + [f"{tmp_path / 'samples'} {p}" for p in range(3)]
+    )
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persistent
+    with open(f"{meta}/Specimen.ndjson") as f:
+        assert len(f.readlines()) == 9
+    with open(f"{meta}/Group.ndjson") as f:
+        assert len(json.loads(f.read())["member"]) == 2
+
+
+def _onekg_meta(spark, tmp_path):
+    from fhir_etl_spark.pipelines.onekg import transform_1k
+
+    tsv = tmp_path / "sample_info.tsv"
+    tsv.write_text(
+        "Sample\tGender\tPopulation Description\tPopulation\tDNA Source from Coriell\t"
+        "Main project LC platform\n"
+        "HG00096\tmale\tBritish\tGBR\t\tILLUMINA\n"
+        "HG00097\tfemale\tBritish\tGBR\tLCL\t\n"
+    )
+    meta = str(tmp_path / "meta")
+    transform_1k(spark, str(tsv), meta)
+    return meta
+
+
+def _listing(spark):
+    return spark.createDataFrame(
+        [("ALL.chr1.x.vcf.gz", 100, "2014-09-12T14:21:07")],
+        "file string, size bigint, last_modified string",
+    )
+
+
+HEADER_COLS = "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT"
+
+
+def test_transform_1k_files_counts_and_header_errors(spark, tmp_path):
+    from fhir_etl_spark.pipelines.onekg import transform_1k_files
+
+    meta = _onekg_meta(spark, tmp_path)
+    header = tmp_path / "header"
+    # one duplicate (HG00097) and one missing (ZZZ) header id
+    header.write_text(f"##fileformat=VCFv4.1\n{HEADER_COLS}\tHG00096\tHG00097\tHG00097\tZZZ\n")
+    counts = transform_1k_files(spark, _listing(spark), str(header), meta)
+    assert counts == {"header_ids": 4, "found": 2, "missing": 1}
+    assert list(counts) == ["header_ids", "found", "missing"]
+
+    for text, message in (
+        ("##fileformat=VCFv4.1\n", "Could not find the '#CHROM' header line in the header file."),
+        (f"{HEADER_COLS}\n", "Expected sample IDs after the first 9 columns, but found none."),
+    ):
+        header.write_text(text)
+        with pytest.raises(ValueError) as exc:
+            transform_1k_files(spark, _listing(spark), str(header), meta)
+        assert str(exc.value) == message
