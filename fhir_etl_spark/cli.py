@@ -13,6 +13,7 @@ argparse, not click — zero extra dependencies.
 from __future__ import annotations
 
 import argparse
+import glob
 import json
 import os
 import sys
@@ -90,6 +91,9 @@ def main(argv: list[str] | None = None) -> int:
         ]
         if missing:
             parser.error(f"transform -p {args.pipeline}: {', '.join(missing)} required")
+
+    if args.command == "validate" and not glob.glob(os.path.join(args.path, "*.ndjson")):
+        parser.error(f"validate: no *.ndjson files under --path {args.path!r}")
 
     if args.command in ("compact", "zorder", "partition"):
         # both verbs overwrite --dest while LAZILY reading --src: the same

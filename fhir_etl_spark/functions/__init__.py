@@ -3,7 +3,7 @@ as pure Catalyst expressions (plus the uuid5 identity pandas_udf, the one
 place Python is genuinely required for bit-parity).
 """
 
-from fhir_etl_spark.functions.identity import fhir_uuid5, mint_id  # noqa: F401
+from fhir_etl_spark.functions.identity import fhir_uuid5  # noqa: F401
 from fhir_etl_spark.functions.strings import (  # noqa: F401
     age_bracket_to_birth_year_range,
     get_chromosome,
@@ -12,4 +12,3 @@ from fhir_etl_spark.functions.strings import (  # noqa: F401
     suffix_key,
 )
 from fhir_etl_spark.functions.temporal import parse_mdtm  # noqa: F401
-from fhir_etl_spark.functions.numeric import coerce_numeric_string  # noqa: F401

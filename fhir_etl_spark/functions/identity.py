@@ -92,26 +92,3 @@ def fhir_uuid5_udf(namespace: uuid.UUID | str):
         return names.map(lambda n: None if n is None else str(uuid.uuid5(ns, n)))
 
     return _uuid5
-
-
-def mint_id(
-    site: str,
-    project_id: str,
-    resource_type: str,
-    system: Column | str,
-    value: Column | str,
-) -> Column:
-    """Mint a resource id from (type, identifier-system, identifier-value).
-
-    Composes the name exactly as the reference does
-    (``{project}/{Type}/{system}|{value}``, utils.py:49-55) and hashes it in
-    the site namespace. ``system`` may be a literal-bearing Column (the
-    doubled ``https://https://`` system strings are frozen constants — see
-    schemas/systems.py)."""
-    name = F.concat(
-        F.lit(f"{project_id}/{resource_type}/"),
-        _col(system),
-        F.lit("|"),
-        _col(value),
-    )
-    return fhir_uuid5(namespace_for_site(site), name)

@@ -1,5 +1,5 @@
-"""Pure-Python ISO BMFF (MP4) container walk — metadata + encoded-sample
-extraction, no av/ffmpeg.
+"""Pure-Python ISO BMFF (MP4) container walk — encoded-sample extraction,
+no av/ffmpeg.
 
 Round 4 left video "gated on a demuxer". That conflated two layers: PIXEL
 decode genuinely needs an H.264/H.265 codec (still gated), but SAMPLE
@@ -12,8 +12,6 @@ layer: keyframe bytes + geometry, not CPU pixel decode.
 
 Implemented here, from the spec:
 - generic (possibly 64-bit-sized) box walker over nested containers
-- ``mp4_metadata``: mvhd duration/timescale, per-track tkhd geometry,
-  mdhd timescale, stsd codec fourcc, stsz sample count
 - ``mp4_samples``: the real sample-to-file-offset resolution — stsz
   (sizes) × stsc (chunk runs: first_chunk ranges → samples per chunk) ×
   stco/co64 (chunk offsets) × stss (sync table; absent ⇒ all sync)
@@ -34,8 +32,6 @@ engine's multimodal-training extension.
 from __future__ import annotations
 
 import struct
-
-_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts", b"dinf"}
 
 
 def walk_boxes(data: bytes, start: int = 0, end: int | None = None):
@@ -74,76 +70,6 @@ def _find(data: bytes, path: list[bytes], start: int, end: int):
                     nxt.append((ps, pe))
         spans = nxt
     return spans
-
-
-def _full_box(data: bytes, start: int) -> tuple[int, int]:
-    """(version, flags) of a FullBox payload; caller advances 4 bytes."""
-    version = data[start]
-    flags = int.from_bytes(data[start + 1 : start + 4], "big")
-    return version, flags
-
-
-def mp4_metadata(data: bytes) -> dict:
-    """Container metadata: {duration_ms, timescale, n_tracks, tracks:
-    [{track_id, width, height, codec, media_timescale, n_samples}]}."""
-    if len(data) < 12 or data[4:8] != b"ftyp":
-        raise ValueError("not an MP4 (missing ftyp)")
-    moov = _find(data, [b"moov"], 0, len(data))
-    if not moov:
-        raise ValueError("no moov box")
-    ms, me = moov[0]
-
-    duration_ms = None
-    timescale = None
-    for fc, ps, pe in walk_boxes(data, ms, me):
-        if fc == b"mvhd":
-            version, _ = _full_box(data, ps)
-            if version == 1:
-                timescale, duration = struct.unpack(">IQ", data[ps + 20 : ps + 32])
-            else:
-                timescale, duration = struct.unpack(">II", data[ps + 12 : ps + 20])
-            duration_ms = duration * 1000 // timescale if timescale else None
-
-    tracks = []
-    for ts, te in _find(data, [b"trak"], ms, me):
-        info = {"track_id": None, "width": None, "height": None,
-                "codec": None, "media_timescale": None, "n_samples": None}
-        for fc, ps, pe in walk_boxes(data, ts, te):
-            if fc == b"tkhd":
-                version, _ = _full_box(data, ps)
-                # FullBox(4) + creation/modification (4+4 at v0, 8+8 at v1)
-                base = ps + (12 if version == 0 else 20)
-                info["track_id"] = struct.unpack(">I", data[base : base + 4])[0]
-                # width/height: 16.16 fixed point, last 8 bytes of tkhd
-                w_fx, h_fx = struct.unpack(">II", data[pe - 8 : pe])
-                info["width"], info["height"] = w_fx >> 16, h_fx >> 16
-        for ms2, me2 in _find(data, [b"mdia"], ts, te):
-            for fc, ps, pe in walk_boxes(data, ms2, me2):
-                if fc == b"mdhd":
-                    version, _ = _full_box(data, ps)
-                    off = ps + (12 if version == 0 else 20)
-                    info["media_timescale"] = struct.unpack(
-                        ">I", data[off : off + 4]
-                    )[0]
-            for ss, se in _find(data, [b"minf", b"stbl"], ms2, me2):
-                for fc, ps, pe in walk_boxes(data, ss, se):
-                    if fc == b"stsd":
-                        (n_entries,) = struct.unpack(">I", data[ps + 4 : ps + 8])
-                        if n_entries:
-                            info["codec"] = data[ps + 12 : ps + 16].decode(
-                                "latin-1"
-                            )
-                    elif fc == b"stsz":
-                        info["n_samples"] = struct.unpack(
-                            ">I", data[ps + 8 : ps + 12]
-                        )[0]
-        tracks.append(info)
-    return {
-        "duration_ms": duration_ms,
-        "timescale": timescale,
-        "n_tracks": len(tracks),
-        "tracks": tracks,
-    }
 
 
 def mp4_samples(data: bytes, track: int = 0) -> list[dict]:

@@ -6,42 +6,15 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def coerce_numeric_string(col: Column | str) -> Column:
-    """F9: numeric-looking string → number, else passthrough string.
-
-    Reference `convert_value_to_float` (utils.py:189-206): a value string
-    matching float syntax becomes a float, integer syntax becomes an int,
-    anything else stays a string. Spark columns are monotyped, so the result
-    is a struct of (num, str) with exactly one side non-null — callers pick
-    the branch they need, or use `coerce_numeric_or_null` for the common
-    numeric-extraction case.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    # Float form mirrors what the reference's float() call ACCEPTS after
-    # its isdigit() gate: exactly one dot, digits on at least one side,
-    # optional leading '-' ('5.', '.5', '-.5' all convert in the
-    # reference). ASCII digits only (Java \d): inputs the reference's
-    # int()/float() would RAISE on — superscripts like '²', misplaced
-    # '-', multiple dots — map to NULL here (a crash cannot be a value;
-    # pinned by the hypothesis parity test). Documented divergence: the
-    # reference DOES convert non-ASCII Unicode decimal digits
-    # (int('٥') == 5); here they are NULL — Spark's string→double cast
-    # cannot parse them, and the reference's TSV inputs never contain
-    # them (see tests/test_properties.reference_coerce).
-    is_float = c.rlike(r"^-?(\d+\.\d*|\.\d+)$")
-    is_int = c.rlike(r"^-?\d+$")
-    num = (
-        F.when(is_float, c.cast("double"))
-        .when(is_int, c.cast("double"))
-        .otherwise(F.lit(None).cast("double"))
-    )
-    txt = F.when(is_float | is_int, F.lit(None).cast("string")).otherwise(c)
-    return F.struct(num.alias("num"), txt.alias("str"))
-
-
 def coerce_numeric_or_null(col: Column | str) -> Column:
-    """Numeric-looking string → DOUBLE, else NULL (the scalar projection of
-    coerce_numeric_string used in flat queries)."""
+    """F9: numeric-looking string → DOUBLE, else NULL.
+
+    Reference ``convert_value_to_float`` (utils.py:189-206) converts a
+    string of float or integer syntax and passes anything else through;
+    Spark columns are monotyped, so the passthrough side is NULL here.
+    ASCII digits only: non-ASCII Unicode digits, which the
+    reference does convert, are NULL — a documented divergence (see
+    tests/test_properties.reference_coerce)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.when(
         c.rlike(r"^-?(\d+(\.\d*)?|\.\d+)$"), c.cast("double")

@@ -1,13 +1,11 @@
-"""Pure-Python WebM/Matroska (EBML) container walk — metadata + encoded
-frame extraction, no av/ffmpeg.
+"""Pure-Python WebM/Matroska (EBML) container walk — encoded frame
+extraction, no av/ffmpeg.
 
 The sibling of functions/mp4.py, from the public Matroska/EBML spec
 (RFC 8794 EBML + the Matroska element registry): every element is
 [varint id][varint size][payload], ids keep their length-marker bit,
 sizes strip it. Implemented:
 
-- ``webm_metadata``: Info (TimestampScale, Duration) and Tracks
-  (TrackNumber, TrackType, CodecID, Video PixelWidth/PixelHeight)
 - ``webm_samples``: Cluster → Timestamp + SimpleBlock walk, resolving
   each block's track, absolute timestamp (cluster time + s16 relative),
   keyframe flag (SimpleBlock flag bit 0x80), and payload offset/size.
@@ -105,15 +103,6 @@ def _uint(data: bytes, s: int, e: int) -> int:
     return int.from_bytes(data[s:e], "big")
 
 
-def _float(data: bytes, s: int, e: int) -> float:
-    n = e - s
-    if n == 4:
-        return struct.unpack(">f", data[s:e])[0]
-    if n == 8:
-        return struct.unpack(">d", data[s:e])[0]
-    raise ValueError(f"bad float width {n}")
-
-
 def _segment(data: bytes) -> tuple[int, int]:
     if len(data) < 4 or _uint(data, 0, 4) != EBML_HEADER:
         raise ValueError("not an EBML/WebM file")
@@ -124,51 +113,6 @@ def _segment(data: bytes) -> tuple[int, int]:
     if seg is None:
         raise ValueError("no Segment element")
     return seg
-
-
-def webm_metadata(data: bytes) -> dict:
-    """{duration_ms, timestamp_scale, n_tracks, tracks: [{track_number,
-    track_type, codec, width, height}]}."""
-    ss, se = _segment(data)
-    scale = 1_000_000  # Matroska default: timestamps in ms
-    duration_ticks = None
-    tracks = []
-    for eid, ps, pe in _walk(data, ss, se):
-        if eid == INFO:
-            for eid2, s2, e2 in _walk(data, ps, pe):
-                if eid2 == TIMESTAMP_SCALE:
-                    scale = _uint(data, s2, e2)
-                elif eid2 == DURATION:
-                    duration_ticks = _float(data, s2, e2)
-        elif eid == TRACKS:
-            for eid2, s2, e2 in _walk(data, ps, pe):
-                if eid2 != TRACK_ENTRY:
-                    continue
-                t = {"track_number": None, "track_type": None, "codec": None,
-                     "width": None, "height": None}
-                for eid3, s3, e3 in _walk(data, s2, e2):
-                    if eid3 == TRACK_NUMBER:
-                        t["track_number"] = _uint(data, s3, e3)
-                    elif eid3 == TRACK_TYPE:
-                        t["track_type"] = _uint(data, s3, e3)
-                    elif eid3 == CODEC_ID:
-                        t["codec"] = data[s3:e3].decode("latin-1")
-                    elif eid3 == VIDEO:
-                        for eid4, s4, e4 in _walk(data, s3, e3):
-                            if eid4 == PIXEL_WIDTH:
-                                t["width"] = _uint(data, s4, e4)
-                            elif eid4 == PIXEL_HEIGHT:
-                                t["height"] = _uint(data, s4, e4)
-                tracks.append(t)
-    duration_ms = (
-        int(duration_ticks * scale / 1_000_000) if duration_ticks is not None else None
-    )
-    return {
-        "duration_ms": duration_ms,
-        "timestamp_scale": scale,
-        "n_tracks": len(tracks),
-        "tracks": tracks,
-    }
 
 
 def _block_fields(data: bytes, ps: int, pe: int) -> tuple[int, int, int, int, int]:

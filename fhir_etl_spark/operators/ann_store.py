@@ -32,23 +32,13 @@ from pyspark.sql import Row, SparkSession
 from fhir_etl_spark.sinks.versioned import (
     ConcurrentWriteError,
     read_snapshot,
+    warehouse_dir,
     write_snapshot,
 )
 
 Codebook = dict[tuple[int, int], list[float]]
 
 _MODEL_SCHEMA = "kind string, s int, c int, vec array<double>, meta string"
-
-
-def default_model_root() -> str:
-    """Repo-local model warehouse (overridable via
-    SPARK_GRAFT_ANN_MODELS) — resolved from the package location, not
-    the CWD, so the driver-contract invocation from any directory hits
-    the same cache."""
-    env = os.environ.get("SPARK_GRAFT_ANN_MODELS")
-    if env:
-        return env
-    return str(Path(__file__).resolve().parents[2] / "spark-warehouse" / "ann_models")
 
 
 def corpus_fingerprint(*paths: str) -> str:
@@ -142,7 +132,7 @@ def load_or_train(
     collision or a hand-mangled store). A save race between two
     processes is benign — versioned commits are atomic, the loser
     retries onto version N+1 of the same deterministic model."""
-    root = model_root or default_model_root()
+    root = model_root or warehouse_dir("ann_models")
     key_src = json.dumps({"fp": fingerprint, "params": params}, sort_keys=True)
     key = hashlib.sha256(key_src.encode()).hexdigest()[:16]
     table = os.path.join(root, f"{name}-{key}")

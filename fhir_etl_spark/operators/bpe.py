@@ -176,21 +176,6 @@ def bpe_encode(
     )
 
 
-def default_bpe_store_root() -> str:
-    """Repo-local BPE merge-table warehouse (overridable via
-    SPARK_GRAFT_BPE_STORE); resolved from the package location so the
-    driver-contract invocation from any CWD hits the same cache."""
-    import os
-    from pathlib import Path
-
-    env = os.environ.get("SPARK_GRAFT_BPE_STORE")
-    if env:
-        return env
-    return str(
-        Path(__file__).resolve().parents[2] / "spark-warehouse" / "bpe_merges"
-    )
-
-
 def bpe_build_or_load(
     spark,
     documents: DataFrame,
@@ -228,10 +213,11 @@ def bpe_build_or_load(
     from fhir_etl_spark.sinks.versioned import (
         ConcurrentWriteError,
         read_snapshot,
+        warehouse_dir,
         write_snapshot,
     )
 
-    root = store_dir or default_bpe_store_root()
+    root = store_dir or warehouse_dir("bpe_merges")
     fp = fingerprint or corpus_text_fingerprint(documents, id_col, text_col)
     params = {
         "n_merges": n_merges,

@@ -1618,19 +1618,6 @@ def suffix_duplication_depths(
 # rounds executed (plan-pinned in tests — no rangepartitioning node).
 
 
-def default_sa_store_root() -> str:
-    """Repo-local suffix-array warehouse (overridable via
-    SPARK_GRAFT_SA_STORE); resolved from the package location so the
-    driver-contract invocation from any CWD hits the same cache."""
-    import os
-    from pathlib import Path
-
-    env = os.environ.get("SPARK_GRAFT_SA_STORE")
-    if env:
-        return env
-    return str(Path(__file__).resolve().parents[2] / "spark-warehouse" / "sa_store")
-
-
 def corpus_text_fingerprint(
     documents: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> str:
@@ -1684,10 +1671,11 @@ def suffix_array_build_or_load(
     from fhir_etl_spark.sinks.versioned import (
         ConcurrentWriteError,
         read_snapshot,
+        warehouse_dir,
         write_snapshot,
     )
 
-    root = store_dir or default_sa_store_root()
+    root = store_dir or warehouse_dir("sa_store")
     fp = fingerprint or corpus_text_fingerprint(documents, id_col, text_col)
     params = {"max_levels": max_levels, "tokenizer": "ws-v1"}
     key_src = json.dumps({"fp": fp, "params": params}, sort_keys=True)

@@ -306,73 +306,25 @@ def stamp_subject(resources: DataFrame, resource_type: str, target_id: str) -> D
     )
 
 
-def group_membership_table(
-    member_specimen_ids: DataFrame, group_id: str, member_type: str = "Specimen"
-) -> DataFrame:
-    """SURVEY §4.4 scale form of Group.member: a ``group_membership
-    (group_id, member_ref)`` table — one ROW per member instead of one
-    43k-element array cell (VERDICT r07 #7).
-
-    At 100 TB a Group can hold millions of members; collect_list funnels
-    them all into a single aggregation task and a single row whose cell
-    must fit in one executor's memory AND in every downstream reader's.
-    The membership table keeps members distributed (partitionable,
-    predicate-pushable, joinable on either column); the parity/export
-    sink assembles the array form only when a FHIR consumer needs it
-    (:func:`assemble_group_member_array`). Map-only plan — no shuffle,
-    no aggregation."""
-    return member_specimen_ids.select(
-        F.lit(group_id).alias("group_id"),
-        F.concat(F.lit(f"{member_type}/"), F.col("specimen_id")).alias("member_ref"),
-    )
-
-
-def _member_array(reference: Column) -> Column:
-    """The one Group member aggregation: ``[{entity: {reference}}]`` over the
-    group's rows, sort_array'd so member order is deterministic (the
-    reference's order is Python set-iteration order — comparison must be
-    order-insensitive anyway, SURVEY.md §5.1)."""
-    return F.sort_array(
-        F.collect_list(
-            F.struct(F.struct(reference.alias("reference")).alias("entity"))
-        )
-    )
-
-
-def assemble_group_member_array(membership: DataFrame) -> DataFrame:
-    """Parity/export-sink assembly: fold a ``group_membership`` table
-    back into ``(group_id, member array)`` rows — bit-identical to what
-    the parity-mode Group builders emit (the same aggregation). Only run
-    where the array form is truly required; this is the one place the
-    single-row bottleneck is paid."""
-    return membership.groupBy("group_id").agg(
-        _member_array(F.col("member_ref")).alias("member")
-    )
-
-
 def _group_resource(
     member_specimen_ids: DataFrame,
     group_id: str,
     study_ext: Column,
     identifier: Column,
-    include_member: bool,
 ) -> DataFrame:
     """The Group resource both cohorts emit (reference
     document_references.py:218-238, gtex_fhirizer.py:377-395) from a
     DataFrame of matched specimen ids (one column ``specimen_id``).
 
-    ``include_member=False`` emits the Group SHELL without the member
-    array — the scale-mode form (SURVEY §4.4), where membership lives in
-    the distributed :func:`group_membership_table` instead of one giant
-    array cell."""
-    if include_member:
-        members = member_specimen_ids.agg(
-            _member_array(F.concat(F.lit("Specimen/"), F.col("specimen_id"))).alias("member")
-        )
-        member_fields = [F.col("member")]
-    else:
-        members = member_specimen_ids.sparkSession.range(1)
-        member_fields = []
+    ``member`` is ``[{entity: {reference}}]``, sort_array'd so member order
+    is deterministic (the reference's order is Python set-iteration order —
+    comparison must be order-insensitive anyway, SURVEY.md §5.1)."""
+    reference = F.concat(F.lit("Specimen/"), F.col("specimen_id"))
+    members = member_specimen_ids.agg(
+        F.sort_array(
+            F.collect_list(F.struct(F.struct(reference.alias("reference")).alias("entity")))
+        ).alias("member")
+    )
     return members.select(
         F.struct(
             F.lit("Group").alias("resourceType"),
@@ -381,7 +333,7 @@ def _group_resource(
             F.array(identifier).alias("identifier"),
             F.lit("specimen").alias("type"),
             F.lit("definitional").alias("membership"),
-            *member_fields,
+            F.col("member"),
         ).alias("resource")
     )
 
@@ -389,7 +341,6 @@ def _group_resource(
 def group_1kg(
     member_specimen_ids: DataFrame,
     group_value: str = S.ONEKG_HEADER_URL,
-    include_member: bool = True,
 ) -> DataFrame:
     """The 1KG Group (reference document_references.py:218-238): id minted
     from the VCF header URL; see :func:`_group_resource`."""
@@ -398,5 +349,4 @@ def group_1kg(
         onekg_mint_const("Group", group_value),
         part_of_study_ext(),
         identifier_struct(F.lit(group_value), S.ONEKG_MINT_SYSTEM, use=None),
-        include_member,
     )

@@ -169,9 +169,7 @@ def research_study_gtex(spark) -> DataFrame:
     )
 
 
-def group_gtex(
-    member_specimen_ids: DataFrame, include_member: bool = True
-) -> DataFrame:
+def group_gtex(member_specimen_ids: DataFrame) -> DataFrame:
     """GTEx Group (gtex_fhirizer.py:377-395). Identifier system is the
     annotations file URL; id minted from the metadata system + GTEX_V10;
     see operators/fhirize._group_resource."""
@@ -180,7 +178,6 @@ def group_gtex(
         GTEX_GROUP_ID,
         part_of_study_ext_gtex(),
         identifier_struct(F.lit(S.GTEX_STUDY_VALUE), S.GTEX_ANNOTATIONS_URL, use=None),
-        include_member,
     )
 
 

@@ -138,20 +138,6 @@ def zorder_key(df: DataFrame, cols: Sequence[str], bits: int = 8) -> DataFrame:
     return out.withColumn("_zvalue", z.cast("long")).drop(*drop, *scaled_names)
 
 
-def _curve_layout(
-    keyed: DataFrame, key_col: str, num_partitions: int | None
-) -> DataFrame:
-    """Shared clustering tail for every space-filling-curve layout:
-    range-partition on the curve key, sort within partitions, drop the
-    key. One implementation so the zorder/hilbert layouts cannot drift
-    apart (the curve is the only difference between them)."""
-    if num_partitions is not None:
-        keyed = keyed.repartitionByRange(num_partitions, key_col)
-    else:
-        keyed = keyed.repartitionByRange(key_col)
-    return keyed.sortWithinPartitions(key_col).drop(key_col)
-
-
 def zorder_layout(
     df: DataFrame,
     cols: Sequence[str],
@@ -165,7 +151,12 @@ def zorder_layout(
     every clustered dimension — so parquet min/max stats prune scans on
     ANY of the clustered columns, not just a leading sort key.
     """
-    return _curve_layout(zorder_key(df, cols, bits=bits), "_zvalue", num_partitions)
+    keyed = zorder_key(df, cols, bits=bits)
+    if num_partitions is not None:
+        keyed = keyed.repartitionByRange(num_partitions, "_zvalue")
+    else:
+        keyed = keyed.repartitionByRange("_zvalue")
+    return keyed.sortWithinPartitions("_zvalue").drop("_zvalue")
 
 
 def hilbert_key(df: DataFrame, cols: Sequence[str], bits: int = 8) -> DataFrame:
@@ -258,16 +249,3 @@ def hilbert_key(df: DataFrame, cols: Sequence[str], bits: int = 8) -> DataFrame:
             ).alias("_hd"),
         )
     return out.select(*passthrough, F.col("_hd").cast("long").alias("_hvalue"))
-
-
-def hilbert_layout(
-    df: DataFrame,
-    cols: Sequence[str],
-    bits: int = 8,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Cluster ``df`` along the Hilbert curve of two columns — the
-    drop-in locality upgrade over :func:`zorder_layout` (same range
-    exchange + in-partition sort via the shared :func:`_curve_layout`;
-    the curve itself is the only change)."""
-    return _curve_layout(hilbert_key(df, cols, bits=bits), "_hvalue", num_partitions)

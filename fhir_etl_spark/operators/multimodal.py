@@ -1,15 +1,14 @@
 """Multimodal column plumbing (north-star per BASELINE.json).
 
-Images/audio/video ride through the engine as opaque ``binary`` columns
-with a typed metadata struct alongside. Everything below runs without
-PIL/av/soundfile (absent from this container):
+Images/audio/video ride through the engine as opaque ``binary`` columns.
+Everything below runs without PIL/av/soundfile (absent from this
+container):
 
 - magic-number sniffing (PNG/JPEG/GIF/RIFF-WAV/MP4) from the binary prefix
-- header dimension parses: PNG IHDR, JPEG SOF marker walk, GIF logical
-  screen descriptor (width/height/bit-depth, pure byte parsing)
+- header dimension parses: JPEG SOF marker walk, GIF logical screen
+  descriptor (width/height/bit-depth, pure byte parsing)
 - WAV RIFF chunk walk: sample rate / channels / bits / duration from the
   ``fmt `` and ``data`` chunks
-- content digest + byte length as stable features
 - REAL PNG decode + resize + re-encode (pure numpy+zlib codec,
   functions/png.py) — ``decode_image`` / ``resize_image``
 - REAL baseline-JPEG decode (pure numpy DCT codec from the T.81 spec,
@@ -19,7 +18,6 @@ PIL/av/soundfile (absent from this container):
   decode needed) — ``split_gif_frames``
 - REAL MP4 + WebM container demux (ISO 14496-12 box walk in
   functions/mp4.py; EBML/Matroska walk in functions/webm.py, round 5):
-  metadata (duration/geometry/codec) in ``extract_media_meta`` and
   encoded-sample / keyframe extraction in ``sample_video_frames``
 - perceptual image near-dup (round 5): ``phash_image`` (64-bit DCT
   hash) + ``phash_neardup_pairs`` (multi-index Hamming search, all
@@ -42,30 +40,14 @@ be sized so one Arrow batch of rows fits executor memory.
 
 from __future__ import annotations
 
-import hashlib
 import logging
 import struct as _struct
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("mime", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("digest", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("bit_depth", T.IntegerType()),
-        # audio (RIFF/WAV fmt chunk); NULL for images
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
 
 _MAGIC = [
     (b"\x89PNG\r\n\x1a\n", "image/png"),
@@ -90,14 +72,6 @@ def sniff_mime(data: bytes | None) -> str | None:
         if data.startswith(magic):
             return mime
     return "application/octet-stream"
-
-
-def png_dimensions(data: bytes) -> tuple[int | None, int | None, int | None]:
-    """(width, height, bit_depth) from the PNG IHDR chunk (bytes 16-25)."""
-    if len(data) < 26 or not data.startswith(b"\x89PNG"):
-        return None, None, None
-    width, height = _struct.unpack(">II", data[16:24])
-    return width, height, data[24]
 
 
 def jpeg_dimensions(data: bytes) -> tuple[int | None, int | None, int | None]:
@@ -177,87 +151,6 @@ def wav_audio_meta(
     return sample_rate, channels, bits, duration_ms
 
 
-def image_dimensions(data: bytes) -> tuple[int | None, int | None, int | None]:
-    """Dispatch on magic number: PNG IHDR / JPEG SOF / GIF LSD — all pure
-    byte parsing, no codec dependency."""
-    if data.startswith(b"\x89PNG"):
-        return png_dimensions(data)
-    if data.startswith(b"\xff\xd8"):
-        return jpeg_dimensions(data)
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        return gif_dimensions(data)
-    return None, None, None
-
-
-def extract_media_meta(
-    df: DataFrame, bytes_col: str = "media", out_col: str = "media_meta"
-) -> DataFrame:
-    """Attach the typed metadata struct via an Arrow-batched mapInPandas.
-
-    Runs per-partition on Arrow batches (never per row through pickle);
-    output schema = input schema + the metadata struct.
-    """
-    out_schema = T.StructType(df.schema.fields + [T.StructField(out_col, MEDIA_META_SCHEMA)])
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = []
-            for data in pdf[bytes_col]:
-                raw = bytes(data) if data is not None else None
-                if raw is None:
-                    metas.append((None,) * 9)
-                    continue
-                width, height, depth = image_dimensions(raw)
-                sample_rate, channels, bits, duration_ms = wav_audio_meta(raw)
-                if len(raw) >= 12 and raw[4:8] == b"ftyp":
-                    try:  # MP4 geometry/duration via the box walk (round 5)
-                        from fhir_etl_spark.functions.mp4 import mp4_metadata
-
-                        m = mp4_metadata(raw)
-                        duration_ms = m["duration_ms"]
-                        if m["tracks"]:
-                            width = m["tracks"][0]["width"] or width
-                            height = m["tracks"][0]["height"] or height
-                    except Exception:  # noqa: BLE001 — meta stays NULL
-                        pass
-                elif raw[:4] == b"\x1a\x45\xdf\xa3":
-                    try:  # WebM via the EBML walk (round 5)
-                        from fhir_etl_spark.functions.webm import webm_metadata
-
-                        m = webm_metadata(raw)
-                        duration_ms = m["duration_ms"]
-                        if m["tracks"]:
-                            width = m["tracks"][0]["width"] or width
-                            height = m["tracks"][0]["height"] or height
-                    except Exception:  # noqa: BLE001 — meta stays NULL
-                        pass
-                metas.append(
-                    (
-                        sniff_mime(raw),
-                        len(raw),
-                        hashlib.md5(raw).hexdigest(),
-                        width,
-                        height,
-                        depth if depth is not None else bits,
-                        sample_rate,
-                        channels,
-                        duration_ms,
-                    )
-                )
-            meta_df = pd.DataFrame(
-                metas,
-                columns=[
-                    "mime", "n_bytes", "digest", "width", "height",
-                    "bit_depth", "sample_rate", "channels", "duration_ms",
-                ],
-            )
-            pdf = pdf.reset_index(drop=True)
-            pdf[out_col] = meta_df.to_dict("records")
-            yield pdf
-
-    return df.mapInPandas(batches, out_schema)
-
-
 PIXELS_SCHEMA = T.StructType(
     [
         T.StructField("height", T.IntegerType()),
@@ -328,38 +221,6 @@ def decode_image(
                     )
             pdf = pdf.reset_index(drop=True)
             pdf[out_col] = out
-            yield pdf
-
-    return df.mapInPandas(batches, out_schema)
-
-
-def fake_image_features(
-    df: DataFrame, bytes_col: str = "media", dim: int = 8, out_col: str = "features"
-) -> DataFrame:
-    """Deterministic stand-in for a feature extractor: derives a dim-float
-    vector from the content digest. The pipeline shape (binary → embedding
-    column usable by operators/similarity.py) is exactly what a real model
-    UDF produces; only the numbers are fake."""
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField(out_col, T.ArrayType(T.FloatType()))]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = []
-            for data in pdf[bytes_col]:
-                if data is None:
-                    feats.append(None)
-                    continue
-                digest = hashlib.sha256(bytes(data)).digest()
-                feats.append(
-                    [
-                        int.from_bytes(digest[4 * i : 4 * i + 4], "big") / 2**32
-                        for i in range(dim)
-                    ]
-                )
-            pdf = pdf.reset_index(drop=True)
-            pdf[out_col] = feats
             yield pdf
 
     return df.mapInPandas(batches, out_schema)

@@ -61,7 +61,6 @@ def _prune(col: Column, dtype: T.DataType) -> Column:
     return col
 
 
-def prune_empty(df: DataFrame, col_name: str = "resource") -> DataFrame:
-    """Apply the N1 pruning rules to a (typically struct-typed) column."""
-    dtype = df.schema[col_name].dataType
-    return df.withColumn(col_name, _prune(F.col(col_name), dtype))
+def prune_empty(df: DataFrame) -> DataFrame:
+    """Apply the N1 pruning rules to the ``resource`` column."""
+    return df.withColumn("resource", _prune(F.col("resource"), df.schema["resource"].dataType))

@@ -18,7 +18,7 @@ composes into larger plans (e.g. gate a write on `status = 'fail'` rows).
 Builders cover the standard constraint vocabulary:
 - completeness(col)            — fraction non-null
 - uniqueness(col)              — distinct / total (1.0 ⇔ key candidate)
-- col_min / col_max(col)       — numeric bounds
+- col_min(col)                 — numeric lower bound
 - in_set_fraction(col, vals)   — domain conformance
 - matches_fraction(col, re)    — pattern conformance (RE must be a
   Java/RE2-agreeing subset if an external oracle replays it)
@@ -48,10 +48,6 @@ def uniqueness(col: str) -> Column:
 
 def col_min(col: str) -> Column:
     return F.min(F.col(col)).cast("double")
-
-
-def col_max(col: str) -> Column:
-    return F.max(F.col(col)).cast("double")
 
 
 def in_set_fraction(col: str, values: Sequence[str]) -> Column:

@@ -175,21 +175,6 @@ def bm25_topk(
     )
 
 
-def default_bm25_store_root() -> str:
-    """Repo-local BM25 index warehouse (overridable via
-    SPARK_GRAFT_BM25_STORE); resolved from the package location so the
-    driver-contract invocation from any CWD hits the same cache."""
-    import os
-    from pathlib import Path
-
-    env = os.environ.get("SPARK_GRAFT_BM25_STORE")
-    if env:
-        return env
-    return str(
-        Path(__file__).resolve().parents[2] / "spark-warehouse" / "bm25_index"
-    )
-
-
 def bm25_build_or_load(
     spark,
     documents: DataFrame,
@@ -234,10 +219,11 @@ def bm25_build_or_load(
     from fhir_etl_spark.sinks.versioned import (
         ConcurrentWriteError,
         read_snapshot,
+        warehouse_dir,
         write_snapshot,
     )
 
-    root = store_dir or default_bm25_store_root()
+    root = store_dir or warehouse_dir("bm25_index")
     fp = fingerprint or corpus_text_fingerprint(documents, id_col, text_col)
     params = {"tokenizer": "ws-v1", "layout": "bm25-v1"}
     key_src = json.dumps({"fp": fp, "params": params}, sort_keys=True)

@@ -2,46 +2,15 @@
 for 100 TB cardinality/frequency questions.
 
 Mergeability is the whole point at scale: each partition builds a small
-sketch, sketches union pairwise — no raw-data shuffle. Spark ships the
-hard parts as built-in aggregates (HLL++ for distinct, CountMinSketch via
-DataFrameStatFunctions / F.count_min_sketch); this module wraps them as
-engine operators with a stable API and adds an exact heavy-hitters
-counterpart for verification.
+sketch, sketches union pairwise — no raw-data shuffle. This module builds
+bottom-k (KMV) samples and Count-Min counter tables from Spark aggregates,
+plus an exact heavy-hitters counterpart for verification.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def distinct_sketch(df: DataFrame, col: str, rsd: float = 0.05) -> DataFrame:
-    """HLL++ approximate distinct count (mergeable across partitions —
-    the aggregation's partial/final phases ARE the sketch merge)."""
-    return df.agg(F.approx_count_distinct(col, rsd=rsd).alias("approx_distinct"))
-
-
-def count_min_sketch(
-    df: DataFrame, col: str, eps: float = 0.001, confidence: float = 0.99, seed: int = 42
-) -> bytes:
-    """Build a CountMinSketch over a column; returns the serialized sketch
-    (Spark's binary format — mergeable via CountMinSketch.mergeInPlace on
-    the JVM side, or by summing the count tables)."""
-    row = df.agg(
-        F.count_min_sketch(F.col(col), F.lit(eps), F.lit(confidence), F.lit(seed)).alias(
-            "sketch"
-        )
-    ).first()
-    return bytes(row["sketch"])
-
-
-def cms_estimate(spark, sketch_bytes: bytes, items: list) -> dict:
-    """Query a serialized CountMinSketch for item frequency estimates
-    (JVM deserialization — driver-side, sketches are KBs)."""
-    jvm = spark._jvm
-    bis = jvm.java.io.ByteArrayInputStream(bytearray(sketch_bytes))
-    cms = jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(bis)
-    return {item: cms.estimateCount(item) for item in items}
 
 
 def heavy_hitters_exact(df: DataFrame, col: str, k: int = 10) -> DataFrame:
@@ -53,38 +22,6 @@ def heavy_hitters_exact(df: DataFrame, col: str, k: int = 10) -> DataFrame:
         .orderBy(F.desc("freq"), F.col(col))
         .limit(k)
     )
-
-
-def hll_sketch_table(
-    df: DataFrame, group_cols: list[str], value_col: str, lg_k: int = 12
-) -> DataFrame:
-    """Per-group MERGEABLE distinct-count state → (group_cols...,
-    sketch: binary) via Spark's Datasketches HLL (``hll_sketch_agg``).
-
-    The sketch TABLE is the point (vs a one-shot approx_count_distinct):
-    sketches persist as a tiny per-partition/per-day table and compose —
-    union any subset of groups later (``hll_merge_estimate``) without
-    touching the 100 TB base again, fold tomorrow's partials in with the
-    same union. The pattern behind every incremental "distinct users
-    over any date range" dashboard. lg_k=12 ⇒ ~1.6 KB per sketch,
-    ~2% relative error.
-    """
-    return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("sketch")
-    )
-
-
-def hll_merge_estimate(
-    sketches: DataFrame, group_cols: list[str] | None = None
-) -> DataFrame:
-    """Fold sketch rows back to estimates: group the sketch table by
-    ``group_cols`` (None = one global row), union the sketches, estimate.
-    Pure JVM aggregation — merging N sketches costs O(N · 2^lg_k) bytes,
-    independent of the original data size."""
-    est = F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("estimate")
-    if group_cols:
-        return sketches.groupBy(*group_cols).agg(est)
-    return sketches.agg(est)
 
 
 def kmv_sample_sketch(

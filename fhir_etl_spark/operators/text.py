@@ -387,20 +387,6 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(normalized)
 
 
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis feature set as columns."""
-    t = F.col(text_col)
-    return df.withColumns(
-        {
-            "n_tokens": token_count(t),
-            "n_bpe_tokens": bpe_ish_token_count(t),
-            "quality": quality_score(t),
-            "lang_pred": lang_id(t),
-            "fingerprint": fingerprint(t),
-        }
-    )
-
-
 def lm_cross_entropy(
     documents: "DataFrame",
     id_col: str = "doc_id",

@@ -49,7 +49,10 @@ def registered_domain(host: Column) -> Column:
 
 
 def _canonical(scheme: Column, host: Column, path: Column, query: Column) -> Column:
-    """Canonical form from pre-parsed components (see normalize_url)."""
+    """Canonical URL from pre-parsed components, for exact URL-level dedup:
+    lowercase scheme + host, drop the fragment, drop tracking parameters
+    (``utm_*``), sort the surviving query parameters, keep the path
+    verbatim (paths are case-sensitive)."""
     params = F.array_sort(
         F.filter(
             F.split(F.coalesce(query, F.lit("")), "&"),
@@ -61,21 +64,6 @@ def _canonical(scheme: Column, host: Column, path: Column, query: Column) -> Col
         F.lower(scheme), F.lit("://"), F.lower(host),
         F.coalesce(path, F.lit("")),
         F.when(qs != "", F.concat(F.lit("?"), qs)).otherwise(F.lit("")),
-    )
-
-
-def normalize_url(url: Column) -> Column:
-    """Canonical URL for exact URL-level dedup: lowercase scheme + host,
-    drop the fragment, drop tracking parameters (``utm_*``), sort the
-    surviving query parameters, keep the path verbatim (paths are
-    case-sensitive). The standard crawl-frontier canonicalization — two
-    fetches of the same page with shuffled/utm'd params collapse to one
-    key."""
-    return _canonical(
-        F.parse_url(url, F.lit("PROTOCOL")),
-        F.parse_url(url, F.lit("HOST")),
-        F.parse_url(url, F.lit("PATH")),
-        F.parse_url(url, F.lit("QUERY")),
     )
 
 

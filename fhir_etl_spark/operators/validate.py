@@ -112,21 +112,13 @@ def structural_roundtrip(
     )
 
 
-def validate_dir(
-    spark: SparkSession, folder_path: str, audit: bool = False, validator=None
-) -> ValidationResult:
+def validate_dir(spark: SparkSession, folder_path: str) -> ValidationResult:
     """Validate every ``*.ndjson`` under ``folder_path``; summary counts only
     non-erroring resources per type (the CLI's result.resources split,
-    cli.py:34-41).
-
-    ``audit=True`` additionally runs the pydantic-depth audit pass
-    (:func:`audit_validate`) and unions its failures into the errors
-    side-output — the engine twin of the reference validating every
-    resource against the full FHIR R5 models (utils.py:164-174,
-    clean_resources utils.py:219-223).
-    """
+    cli.py:34-41). Raises ``ValueError`` when there is none."""
     files = sorted(glob.glob(os.path.join(folder_path, "*.ndjson")))
-    assert files, f"no NDJSON files under {folder_path}"
+    if not files:
+        raise ValueError(f"no NDJSON files under {folder_path}")
     lines = spark.read.text(files).select(
         F.input_file_name().alias("path"), F.col("value")
     ).filter(F.trim("value") != "")
@@ -135,97 +127,7 @@ def validate_dir(
     errors = checked.filter(F.col("error").isNotNull()).select(
         "path", "resource_type", "id", "error", "raw"
     )
-    if audit:
-        audit_errors = audit_validate(lines, validator=validator).filter(
-            F.col("error").isNotNull()
-        )
-        errors = errors.unionByName(audit_errors).dropDuplicates(["path", "id", "error"])
-        passed = checked.filter(F.col("error").isNull()).join(
-            audit_errors.select("path", "id"), ["path", "id"], "left_anti"
-        )
-    else:
-        passed = checked.filter(F.col("error").isNull())
+    passed = checked.filter(F.col("error").isNull())
     summary_rows = passed.groupBy("resource_type").count().collect()
     summary = {r["resource_type"]: r["count"] for r in summary_rows}
     return ValidationResult(summary=summary, errors=errors)
-
-
-# ---------------------------------------------------------------------------
-# Tier-(c): pydantic-depth audit mode (SURVEY.md §4.3)
-# ---------------------------------------------------------------------------
-
-
-def _fhir_resources_validator():
-    """Row validator backed by the full FHIR R5 pydantic models — the exact
-    semantics of the reference's ``validate_fhir_resource_from_type``
-    (utils.py:164-174): import ``fhir.resources.<type>``, ``model_validate``
-    the parsed dict. Gated: the ``fhir.resources`` package is an optional
-    dependency (absent from this image)."""
-    import importlib
-    import json
-
-    try:
-        importlib.import_module("fhir.resources")
-    except ImportError as exc:
-        raise NotImplementedError(
-            "pydantic audit mode needs the optional 'fhir.resources' package; "
-            "pass validator= explicitly or install fhir.resources"
-        ) from exc
-
-    def validate_line(raw: str) -> str | None:
-        try:
-            data = json.loads(raw)
-            rtype = data["resourceType"]
-            module = importlib.import_module(f"fhir.resources.{rtype.lower()}")
-            getattr(module, rtype).model_validate(data)
-            return None
-        except Exception as exc:  # route EVERY failure to the side-output
-            return f"pydantic:{type(exc).__name__}:{str(exc)[:200]}"
-
-    return validate_line
-
-
-def audit_validate(lines: DataFrame, validator=None) -> DataFrame:
-    """Arrow-batched per-resource audit: apply ``validator(raw_line) ->
-    error | None`` to every line via ``mapInPandas`` and return
-    (path, resource_type, id, error, raw).
-
-    The hot structural/semantic path stays pure Catalyst (_validate_lines);
-    this pass is the OPT-IN deep check, so Python-per-row cost is paid only
-    when auditing. Batches arrive as Arrow RecordBatches (pandas frames) —
-    one validator call per row, zero driver collection, parallel across
-    partitions. ``validator=None`` resolves the fhir.resources pydantic
-    validator (NotImplementedError when the package is absent)."""
-    import pandas as pd
-
-    if validator is None:
-        validator = _fhir_resources_validator()
-
-    def run(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "resource_type": [
-                        _cheap_json_field(v, "resourceType") for v in pdf["value"]
-                    ],
-                    "id": [_cheap_json_field(v, "id") for v in pdf["value"]],
-                    "error": [validator(v) for v in pdf["value"]],
-                    "raw": pdf["value"],
-                }
-            )
-
-    return lines.mapInPandas(
-        run,
-        schema="path string, resource_type string, id string, error string, raw string",
-    )
-
-
-def _cheap_json_field(raw: str, field: str) -> str | None:
-    try:
-        import json
-
-        v = json.loads(raw).get(field)
-        return v if isinstance(v, str) else None
-    except Exception:
-        return None

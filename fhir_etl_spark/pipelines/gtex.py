@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from fhir_etl_spark.functions.strings import suffix_key
 from fhir_etl_spark.operators.fhirize_gtex import (
-    GTEX_GROUP_ID,
     fhirize_document_reference_gtex,
     fhirize_patient_gtex,
     fhirize_research_subject_gtex,
@@ -23,7 +22,6 @@ from fhir_etl_spark.operators.fhirize_gtex import (
     gtex_mint,
     research_study_gtex,
 )
-from fhir_etl_spark.pipelines import write_group_membership
 from fhir_etl_spark.sinks.ndjson import write_ndjson
 
 
@@ -79,20 +77,12 @@ def transform_gtex(
     filelist: DataFrame,
     annotations: DataFrame,
     meta_dir: str,
-    scale_mode: bool = False,
 ) -> dict[str, str]:
     """Full GTEx transform over staged inputs:
 
     - subjects / samples: the paginated REST payloads (S3), staged
     - filelist: the nested fileList payload (S4), staged
     - annotations: the SampleAttributesDS TSV (S2), staged
-
-    ``scale_mode`` (SURVEY §4.4, VERDICT r07 #7): default parity mode
-    builds the reference-exact Group whose member array holds all 43,559
-    specimen refs in ONE row (golden-parity requirement); scale mode
-    writes the distributed ``group_membership.parquet`` table plus the
-    Group shell instead — see pipelines/onekg.transform_1k_files for the
-    full rationale.
 
     Each REST source feeds two outputs (subjects: Patient and
     ResearchSubject; samples: Specimen and the Group membership), so both
@@ -104,15 +94,13 @@ def transform_gtex(
     try:
         files = explode_filelist(filelist)
         members = gtex_group_members(samples, annotations)
-        if scale_mode:
-            write_group_membership(members, GTEX_GROUP_ID, meta_dir)
         outputs = {
             "Patient": fhirize_patient_gtex(subjects),
             "ResearchSubject": fhirize_research_subject_gtex(subjects),
             "Specimen": fhirize_specimen_gtex(samples),
             "DocumentReference": fhirize_document_reference_gtex(files),
             "ResearchStudy": research_study_gtex(spark),
-            "Group": group_gtex(members, include_member=not scale_mode),
+            "Group": group_gtex(members),
         }
         return {rtype: write_ndjson(df, meta_dir, rtype) for rtype, df in outputs.items()}
     finally:

@@ -31,7 +31,6 @@ from fhir_etl_spark.operators.membership import (
     specimen_identifier_values,
     vcf_header_sample_ids,
 )
-from fhir_etl_spark.pipelines import write_group_membership
 from fhir_etl_spark.schemas import systems as S
 from fhir_etl_spark.sinks.ndjson import write_ndjson
 from fhir_etl_spark.sinks.upsert import create_or_extend
@@ -64,7 +63,6 @@ def transform_1k_files(
     ftp_listing: DataFrame,
     header_path: str,
     meta_dir: str,
-    scale_mode: bool = False,
 ) -> dict[str, int]:
     """Stage 2 (reference transform_1k_files): FTP listing + VCF header +
     read-back of stage 1's Specimen.ndjson → DocumentReference + Group.
@@ -72,16 +70,6 @@ def transform_1k_files(
     ``ftp_listing`` columns: file STRING, size BIGINT, last_modified STRING
     (ISO-8601, no offset) — the staged form of the FTP NLST/SIZE/MDTM scan
     (document_references.py:125-153).
-
-    ``scale_mode`` (SURVEY §4.4, VERDICT r07 #7): parity mode (default)
-    emits the reference-exact Group with its collect_list member array —
-    required for golden NDJSON parity. Scale mode writes the SAME
-    membership as a distributed ``group_membership.parquet`` table
-    (group_id, member_ref — one row per member, map-only, partitionable)
-    plus the Group SHELL resource without the array, so a
-    million-member Group never funnels through one aggregation task or
-    one row. The parity array is recoverable exactly via
-    operators/fhirize.assemble_group_member_array.
     """
     # P3 substring filter + P5 dropna (document_references.py:132-134,156)
     files = ftp_listing.filter(F.lower(F.col("file")).contains("vcf")).na.drop(
@@ -100,14 +88,12 @@ def transform_1k_files(
         onekg_mint("Specimen", F.col("sample_id")).alias("specimen_id")
     )
     group_id = onekg_mint_const("Group", S.ONEKG_HEADER_URL)
-    if scale_mode:
-        write_group_membership(members, group_id, meta_dir)
-    group = group_1kg(members, include_member=not scale_mode)
+    group = group_1kg(members)
 
-    # DocumentReferences stamped with the Group subject (J4), deduped by id
-    # (document_references.py:248 — {id: doc} dict semantics)
+    # DocumentReferences stamped with the Group subject (J4). The upsert
+    # dedups by id, first wins (document_references.py:248 — {id: doc} dict
+    # semantics); the plan stays narrow, so its arrival order is listing order.
     doc_refs = stamp_subject(fhirize_document_reference_1kg(files), "Group", group_id)
-    doc_refs = doc_refs.withColumn("_id", F.col("resource.id")).dropDuplicates(["_id"]).drop("_id")
 
     create_or_extend(spark, doc_refs, meta_dir, "DocumentReference", update_existing=False)
     create_or_extend(spark, group, meta_dir, "Group", update_existing=False)

@@ -181,8 +181,8 @@ def _hilbert_sql(bits: int) -> str:
 )
 def y3_hilbert_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hilbert-curve values over (l_partkey, l_suppkey): the
-    locality-upgraded clustering key behind hilbert_layout (unit-step
-    curve — no Z-order diagonal jumps), its unrolled rotate/reflect walk
+    locality-upgraded alternative to the Z-order key (unit-step curve —
+    no Z-order diagonal jumps), its unrolled rotate/reflect walk
     replayed level-for-level by the oracle."""
     from fhir_etl_spark.operators.layout import hilbert_key
 

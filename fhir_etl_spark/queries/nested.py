@@ -233,7 +233,7 @@ def n9_prune_serialize(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("tag"),
         ).alias("resource"),
     )
-    pruned = prune_empty(shaped, "resource")
+    pruned = prune_empty(shaped)
     return pruned.select(
         "o_orderkey",
         F.to_json(F.col("resource"), {"ignoreNullFields": "true"}).alias(

@@ -346,10 +346,9 @@ def t7_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m1_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opaque-binary column plumbing with a full value oracle: byte
     length, content digest, and leading magic bytes over a binary column
-    (documents.text encoded to UTF-8 stands in for media blobs — the real
-    corpus media path is operators/multimodal.extract_media_meta, whose
-    sniffing/dimension parsing is pinned by test_multimodal; this query
-    proves the binary-type scan/expression surface against DuckDB)."""
+    (documents.text encoded to UTF-8 stands in for media blobs; this
+    query proves the binary-type scan/expression surface against
+    DuckDB)."""
     documents = load_tables(spark, sf_dir, "documents")
     blob = F.encode("text", "UTF-8")
     return documents.select(

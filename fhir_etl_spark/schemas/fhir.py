@@ -1,8 +1,8 @@
 """Output (FHIR R5) StructTypes for the six supported resource types —
-the fixed, externally-governed schemas (SURVEY.md §1.3 rule 2). Used for
-typed NDJSON read-back (sinks/ndjson.read_ndjson) and structural
-validation; the fhirize projections BUILD these shapes, so a round-trip
-through from_json with these schemas is the structural-validity check."""
+the fixed, externally-governed schemas (SURVEY.md §1.3 rule 2). The
+fhirize projections BUILD these shapes, so a round-trip through from_json
+with these schemas is a structural-validity check
+(operators/validate.structural_roundtrip, the tests' shape oracle)."""
 
 from __future__ import annotations
 

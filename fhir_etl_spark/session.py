@@ -59,25 +59,19 @@ def ship_package(spark: SparkSession) -> None:
 
 def get_spark(
     app_name: str = "fhir_etl_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults.
+    """Build (or reuse) a ``local[$SPARK_GRAFT_CPUS]`` SparkSession with
+    engine defaults; ``extra_conf`` entries override them.
 
-    Every config below is cluster-safe: nothing pins local mode except the
-    master URL itself, which is overridable via ``SPARK_GRAFT_MASTER``.
+    ``spark.driver.memory`` is set only from ``SPARK_GRAFT_DRIVER_MEM``;
+    without it Spark's own default (1g) applies, which fits any host.
     """
     cpus = default_parallelism()
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
-    )
-
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -104,10 +98,10 @@ def get_spark(
         # Retention costs driver memory only when the UI is on, which
         # is bench-only.
         .config("spark.ui.retainedStages", "20000")
-        # local mode = driver-only JVM; leave headroom under the 128 GiB box
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.driver.maxResultSize", "4g")
     )
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        builder = builder.config("spark.driver.memory", os.environ["SPARK_GRAFT_DRIVER_MEM"])
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
 

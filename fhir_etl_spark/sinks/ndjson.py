@@ -28,23 +28,23 @@ from pyspark.sql import functions as F
 from fhir_etl_spark.operators.prune import prune_empty
 
 
-def serialize(resources: DataFrame, col_name: str = "resource") -> DataFrame:
-    """struct column → one JSON string per row, nulls dropped (N1 final layer)."""
-    return serialize_keeping(resources, col_name).select("json")
+def serialize(resources: DataFrame) -> DataFrame:
+    """``resource`` struct column → one JSON string per row, nulls dropped
+    (N1 final layer)."""
+    return serialize_keeping(resources).select("json")
 
 
-def serialize_keeping(resources: DataFrame, col_name: str = "resource") -> DataFrame:
+def serialize_keeping(resources: DataFrame) -> DataFrame:
     """:func:`serialize` that keeps every column of ``resources`` other than
-    ``col_name`` beside ``json`` (the upsert sink carries its order key)."""
-    pruned = prune_empty(resources, col_name)
-    return pruned.withColumn(
+    ``resource`` beside ``json`` (the upsert sink carries its order key)."""
+    return prune_empty(resources).withColumn(
         "json",
         # a resource pruned to nothing serializes as '{}' (the reference's
         # remove_empty_dicts returns {} at the top level, utils.py:144-153)
         F.coalesce(
-            F.to_json(F.col(col_name), {"ignoreNullFields": "true"}), F.lit("{}")
+            F.to_json(F.col("resource"), {"ignoreNullFields": "true"}), F.lit("{}")
         ),
-    ).drop(col_name)
+    ).drop("resource")
 
 
 def write_lines(
@@ -80,14 +80,10 @@ def write_lines(
     return target
 
 
-def write_ndjson(
-    resources: DataFrame,
-    folder_path: str,
-    resource_type: str,
-    col_name: str = "resource",
-) -> str:
-    """Write ``{folder}/{ResourceType}.ndjson``. Returns the path."""
-    return write_lines(serialize(resources, col_name), folder_path, resource_type)
+def write_ndjson(resources: DataFrame, folder_path: str, resource_type: str) -> str:
+    """Write the ``resource`` column as ``{folder}/{ResourceType}.ndjson``.
+    Returns the path."""
+    return write_lines(serialize(resources), folder_path, resource_type)
 
 
 def read_ndjson(spark, path: str, schema=None) -> DataFrame:

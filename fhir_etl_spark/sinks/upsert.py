@@ -29,9 +29,7 @@ from fhir_etl_spark.schemas.systems import SUPPORTED_RESOURCE_TYPES
 from fhir_etl_spark.sinks.ndjson import serialize_keeping, write_lines
 
 
-def _keyed_json(
-    resources: DataFrame, col_name: str, order_col: str | None = None
-) -> DataFrame:
+def _keyed_json(resources: DataFrame, order_col: str | None = None) -> DataFrame:
     """(id, json, _seq) from a resource-struct DataFrame.
 
     ``_seq`` is arrival order: it drives duplicate-id precedence and the
@@ -46,7 +44,7 @@ def _keyed_json(
     seq = (
         F.monotonically_increasing_id() if order_col is None else F.col(order_col).cast("long")
     )
-    keyed = serialize_keeping(resources.select(col_name, seq.alias("_seq")), col_name)
+    keyed = serialize_keeping(resources.select("resource", seq.alias("_seq")))
     return keyed.select(
         F.get_json_object("json", "$.id").alias("id"), "json", "_seq"
     )
@@ -66,10 +64,10 @@ def create_or_extend(
     folder_path: str,
     resource_type: str,
     update_existing: bool = False,
-    col_name: str = "resource",
     order_col: str | None = None,
 ) -> str:
-    """Upsert ``new_items`` into ``{folder}/{resource_type}.ndjson``.
+    """Upsert the ``resource`` column of ``new_items`` into
+    ``{folder}/{resource_type}.ndjson``.
 
     If ``new_items`` was shuffled/repartitioned, pass ``order_col`` naming a
     column that defines arrival order for duplicate-id precedence (see
@@ -78,7 +76,7 @@ def create_or_extend(
         f"Invalid resource type: {resource_type}"
     )
     file_path = os.path.join(folder_path, f"{resource_type}.ndjson")
-    new = _keyed_json(new_items, col_name, order_col)
+    new = _keyed_json(new_items, order_col)
     # one row per new id, at its first arrival, holding the winning line:
     # first wins (insert-only) / last wins (update mode) — utils.py:120-122
     # dict-overwrite order

@@ -2,7 +2,7 @@
 
 Delta Lake needs jars the engine does not ship; this module provides the
 table-format CONCEPT — atomic commits, snapshot isolation for readers,
-time travel, vacuum — with nothing but parquet + JSON manifests, the way
+time travel — with nothing but parquet + JSON manifests, the way
 log-structured table formats actually work:
 
 - every commit writes its data files into a fresh
@@ -27,8 +27,8 @@ retry (``max_retries``) re-reads the head and re-publishes the same
 files at the next version — optimistic concurrency, the same protocol a
 Delta log store implements, minus cross-node coordination (plain NFS
 hard-link semantics are the limit of what a filesystem gives you).
-Readers are always safe: they pin one manifest and vacuum never deletes
-a directory referenced by a retained snapshot.
+Readers are always safe: they pin one manifest, and no commit deletes
+a directory an earlier snapshot references.
 
 Reference parity note: the reference's NDJSON store overwrites files in
 place (utils.py:101-135) — no history, no atomicity. This sink is the
@@ -40,8 +40,8 @@ from __future__ import annotations
 import json
 import os
 import secrets
-import shutil
 import tempfile
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,11 +49,19 @@ _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
 
 
+def warehouse_dir(name: str) -> str:
+    """``spark-warehouse/{name}`` at the source root: the default home of a
+    persisted store (ANN models, suffix arrays, BPE merges, BM25 indexes).
+    Resolved from the package location, not the CWD, so the driver-contract
+    invocation from any directory hits the same cache."""
+    return str(Path(__file__).resolve().parents[2] / "spark-warehouse" / name)
+
+
 class ConcurrentWriteError(RuntimeError):
     """Another writer published this version first (optimistic-concurrency
     conflict). The losing commit's data directory is left on disk as an
-    orphan — re-calling write_snapshot re-writes it, and vacuum() collects
-    it; nothing of the WINNING commit is ever disturbed."""
+    orphan — re-calling write_snapshot re-writes it; nothing of the
+    WINNING commit is ever disturbed."""
 
 
 def _manifest_path(table_path: str, version: int) -> str:
@@ -89,8 +97,7 @@ def write_snapshot(
     """Commit ``df`` as the next snapshot; returns the new version.
 
     ``append`` stacks onto the previous snapshot's file set;
-    ``overwrite`` starts a fresh set (earlier versions stay readable
-    until vacuumed).
+    ``overwrite`` starts a fresh set (earlier versions stay readable).
 
     Concurrency: the manifest is published with an exclusive atomic
     hard-link, so when two writers race to the same version exactly one
@@ -147,7 +154,7 @@ def write_snapshot(
     token = secrets.token_hex(4)
     rel_dir = os.path.join(_DATA_DIR, f"c-{token}")
     out_dir = os.path.join(table_path, rel_dir)
-    # data first — an interrupted job leaves an orphan dir (vacuumable),
+    # data first — an interrupted job leaves an orphan dir,
     # never a corrupt table
     df.write.mode("errorifexists").parquet(out_dir)
     schema_json = df.schema.jsonValue()
@@ -244,31 +251,6 @@ def snapshot_history(table_path: str) -> list[dict]:
     ]
 
 
-def vacuum(table_path: str, keep_last: int = 1) -> list[str]:
-    """Drop manifests older than the last ``keep_last`` and delete data
-    directories no retained snapshot references (incl. orphans from
-    interrupted commits). Returns the deleted directory names."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    versions = _versions(table_path)
-    keep = versions[-keep_last:]
-    referenced = set()
-    for v in keep:
-        referenced.update(_load_manifest(table_path, v)["data_dirs"])
-    deleted = []
-    data_root = os.path.join(table_path, _DATA_DIR)
-    if os.path.isdir(data_root):
-        for d in sorted(os.listdir(data_root)):
-            rel = os.path.join(_DATA_DIR, d)
-            if rel not in referenced:
-                shutil.rmtree(os.path.join(data_root, d))
-                deleted.append(rel)
-    for v in versions:
-        if v not in keep:
-            os.remove(_manifest_path(table_path, v))
-    return deleted
-
-
 def compact_snapshot(
     spark: SparkSession,
     table_path: str,
@@ -284,9 +266,9 @@ def compact_snapshot(
     rewrite as a normal ``overwrite`` snapshot — so compaction rides the
     existing atomicity/isolation machinery: readers pinned to older
     manifests keep their file sets, the compacted version is just the
-    new head, a concurrent writer loses the version race LOUDLY
-    (:class:`ConcurrentWriteError`), and ``vacuum`` reclaims the small
-    files once no retained snapshot references them.
+    new head, and a concurrent writer loses the version race LOUDLY
+    (:class:`ConcurrentWriteError`). The small files stay on disk for the
+    older versions that reference them.
 
     No-op (returns with ``compacted=False``, no commit) when the head
     already has ≤ the target file count — "compaction" that rewrites

@@ -1,4 +1,4 @@
-"""CLI + typed-schema round-trip + scale-mode membership table."""
+"""CLI + typed-schema round-trip."""
 
 from __future__ import annotations
 
@@ -64,39 +64,6 @@ def test_structural_roundtrip_catches_shape_drift(spark, tmp_path):
 
     rows = structural_roundtrip(spark, str(bad), "Patient").collect()
     assert not rows[0]["structurally_valid"]
-
-
-def test_scale_mode_writes_membership_table(spark, onekg_meta, tmp_path):
-    """scale_mode writes the Group shell plus group_membership.parquet, one
-    (group_id, member_ref) row per member, next to the other resources."""
-    import shutil
-
-    from fhir_etl_spark.operators.fhirize import onekg_mint_const
-    from fhir_etl_spark.pipelines.onekg import transform_1k_files
-    from fhir_etl_spark.schemas import systems as S
-
-    meta = tmp_path / "meta"
-    shutil.copytree(onekg_meta, meta)
-    (meta / "Group.ndjson").unlink()
-    (meta / "DocumentReference.ndjson").unlink()
-    listing = spark.createDataFrame(
-        [("ALL.chr1.x.vcf.gz", 100, "2014-09-12T14:21:07")],
-        "file string, size long, last_modified string",
-    )
-    header = tmp_path / "header"
-    header.write_text("#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tHG00096\tHG00097\n")
-    counts = transform_1k_files(spark, listing, str(header), str(meta), scale_mode=True)
-    assert counts == {"header_ids": 2, "found": 2, "missing": 0}
-
-    group_id = onekg_mint_const("Group", S.ONEKG_HEADER_URL)
-    back = spark.read.parquet(str(meta / "group_membership.parquet"))
-    rows = {(r["group_id"], r["member_ref"]) for r in back.collect()}
-    with open(meta / "Specimen.ndjson") as f:
-        specimen_ids = {json.loads(line)["id"] for line in f}
-    assert rows == {(group_id, f"Specimen/{i}") for i in specimen_ids}
-    with open(meta / "Group.ndjson") as f:
-        (shell,) = [json.loads(line) for line in f]
-    assert shell["id"] == group_id and "member" not in shell
 
 
 def test_cli_transform_runs_outside_the_repo(tmp_path):
@@ -297,3 +264,21 @@ def test_cli_transform_missing_inputs_is_a_usage_error(
     assert exc.value.code == 2
     err = capsys.readouterr().err
     assert f"transform -p {pipeline}: {message}" in err
+
+
+def test_cli_validate_without_ndjson_is_a_usage_error(tmp_path, monkeypatch, capsys):
+    """``validate --path`` on a directory with no ``*.ndjson`` is an argument
+    error (exit 2, message on stderr) before any Spark session starts — not
+    a traceback from inside the validator."""
+    from fhir_etl_spark import cli, session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a Spark session was requested")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    (tmp_path / "notes.txt").write_text("not a resource file\n")
+    for path in (tmp_path, tmp_path / "absent"):
+        with pytest.raises(SystemExit) as exc:
+            cli.main(["validate", "--path", str(path)])
+        assert exc.value.code == 2
+        assert "validate: no *.ndjson files under --path" in capsys.readouterr().err

@@ -198,38 +198,6 @@ def test_group_gtex_envelope_golden(spark, tmp_path):
     assert mine == golden
 
 
-def test_group_gtex_scale_shell_and_membership(spark, tmp_path):
-    """SURVEY §4.4 / VERDICT r07 #7 (GTEx side — the literal 43,559-member
-    case §4.4 was written about): the scale-mode shell matches the parity
-    Group minus the member array, and the membership table carries the
-    identical member set one row at a time."""
-    from fhir_etl_spark.operators.fhirize import (
-        assemble_group_member_array,
-        group_membership_table,
-    )
-    from fhir_etl_spark.operators.fhirize_gtex import GTEX_GROUP_ID, group_gtex
-    from fhir_etl_spark.sinks.ndjson import write_ndjson
-
-    members = spark.createDataFrame([("u1",), ("u2",)], "specimen_id string")
-    write_ndjson(group_gtex(members, include_member=False), str(tmp_path), "Group")
-    shell = json.loads(open(f"{tmp_path}/Group.ndjson").read())
-    assert "member" not in shell
-
-    full = json.loads(group_gtex(members).toJSON().first())["resource"]
-    full_member = full.pop("member")
-    assert shell == full
-
-    mt = group_membership_table(members, GTEX_GROUP_ID)
-    assert sorted(r["member_ref"] for r in mt.collect()) == [
-        "Specimen/u1", "Specimen/u2",
-    ]
-    assembled = assemble_group_member_array(mt).first()
-    assert [
-        {"entity": {"reference": m["entity"]["reference"]}}
-        for m in assembled["member"]
-    ] == full_member
-
-
 def test_specimen_gtex_structure(spark, tmp_path):
     """Structural check (golden Specimen stripped upstream): NA dataType →
     literal 'None' coding; subject references the minted Patient id."""

@@ -214,91 +214,3 @@ def test_group_golden_parity(stage2_outputs):
     assert counts["missing"] == 2  # the two FAKE ids
 
 
-def test_group_membership_scale_mode(spark, stage2_outputs, tmp_path):
-    """SURVEY §4.4 / VERDICT r07 #7: scale mode writes group_membership
-    (group_id, member_ref) rows instead of the one-row member array, the
-    Group SHELL carries no member field, and the two modes agree on the
-    exact member set — with assemble_group_member_array recovering the
-    parity array bit-for-bit."""
-    import json
-
-    from fhir_etl_spark.operators.fhirize import (
-        assemble_group_member_array,
-        group_1kg,
-        group_membership_table,
-        onekg_mint_const,
-    )
-    from fhir_etl_spark.schemas import systems as S
-
-    meta_dir, _ = stage2_outputs
-    # parity-mode golden member refs (the source of truth)
-    parity = list(load_golden("Group").values())[0]
-    parity_refs = sorted(m["entity"]["reference"] for m in parity["member"])
-    members = spark.createDataFrame(
-        [(r.split("/", 1)[1],) for r in parity_refs], "specimen_id string"
-    )
-    group_id = onekg_mint_const("Group", S.ONEKG_HEADER_URL)
-
-    # scale form: one row per member, same set, no aggregation in the plan
-    mt = group_membership_table(members, group_id)
-    rows = mt.collect()
-    assert sorted(r["member_ref"] for r in rows) == parity_refs
-    assert {r["group_id"] for r in rows} == {group_id}
-    assert "Aggregate" not in mt._jdf.queryExecution().optimizedPlan().toString()
-
-    # shell: identical resource minus the member array
-    shell = json.loads(group_1kg(members, include_member=False).toJSON().first())
-    full = json.loads(group_1kg(members).toJSON().first())
-    assert "member" not in shell["resource"]
-    full["resource"].pop("member")
-    assert shell["resource"] == full["resource"]
-
-    # export-sink assembly reproduces the parity array exactly
-    assembled = assemble_group_member_array(mt).first()
-    assert [m["entity"]["reference"] for m in assembled["member"]] == sorted(
-        parity_refs
-    )
-
-    # pipeline wiring: scale_mode writes the table next to the shell
-    from fhir_etl_spark.pipelines.onekg import transform_1k_files
-
-    # rebuild the tiny staged inputs from the golden outputs (same as the
-    # stage2 fixture, but into a scratch meta dir so parity outputs stay)
-    import shutil
-
-    scratch = str(tmp_path / "meta_scale")
-    shutil.copytree(meta_dir, scratch)
-    docs = load_golden("DocumentReference")
-    listing = spark.createDataFrame(
-        [
-            (
-                d["identifier"][0]["value"],
-                int(d["content"][0]["attachment"].get("size", 0)),
-                d["date"].rstrip("Z"),
-            )
-            for d in docs.values()
-        ],
-        "file string, size long, last_modified string",
-    )
-    header_path = tmp_path / "header"
-    samples = sorted(
-        v["identifier"][0]["value"]
-        for v in load_golden("Specimen").values()
-    )[:5]
-    header_path.write_text(
-        "##fileformat=VCFv4.1\n#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\t"
-        + "\t".join(samples)
-        + "\n"
-    )
-    import os
-
-    os.remove(f"{scratch}/Group.ndjson")
-    os.remove(f"{scratch}/DocumentReference.ndjson")
-    transform_1k_files(spark, listing, str(header_path), scratch, scale_mode=True)
-    assert os.path.isdir(f"{scratch}/group_membership.parquet")
-    written = spark.read.parquet(f"{scratch}/group_membership.parquet")
-    assert written.count() == 5  # the 5 staged header samples
-    with open(f"{scratch}/Group.ndjson") as f:
-        shell_written = json.loads(f.readline())
-    assert "member" not in shell_written
-    assert shell_written["id"] == group_id

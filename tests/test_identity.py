@@ -11,10 +11,9 @@ from pyspark.sql import functions as F
 from fhir_etl_spark.functions.identity import (
     fhir_uuid5,
     fhir_uuid5_udf,
-    mint_id,
     namespace_for_site,
 )
-from fhir_etl_spark.operators.fhirize import ONEKG_STUDY_ID, onekg_mint_const
+from fhir_etl_spark.operators.fhirize import ONEKG_STUDY_ID, onekg_mint, onekg_mint_const
 from fhir_etl_spark.schemas import systems as S
 
 GOLDEN_1KG_STUDY_ID = "4502d1f5-5275-5be7-9942-21f7fb8a6f70"
@@ -63,15 +62,7 @@ def test_sql_udf_cpython_tripartite(spark, site):
 
 def test_mint_id_composition(spark):
     df = spark.createDataFrame([("HG00096",)], "sample string")
-    minted = df.select(
-        mint_id(
-            S.THOUSAND_GENOMES_SITE,
-            "1KG",
-            "Patient",
-            F.lit(S.ONEKG_MINT_SYSTEM),
-            F.col("sample"),
-        ).alias("id")
-    ).first()["id"]
+    minted = df.select(onekg_mint("Patient", F.col("sample")).alias("id")).first()["id"]
     ns = namespace_for_site(S.THOUSAND_GENOMES_SITE)
     assert minted == str(
         uuid.uuid5(ns, f"1KG/Patient/{S.ONEKG_MINT_SYSTEM}|HG00096")

@@ -203,42 +203,6 @@ def test_hilbert_unit_step_bijection_and_locality(spark):
         assert bbox_area_sum(hil, width) < bbox_area_sum(mor, width), width
 
 
-def test_hilbert_layout_files_prune_on_both_dimensions(spark, sf_dir, tmp_path):
-    """Physical effect: hilbert_layout-clustered parquet files have
-    per-file (partkey, suppkey) min/max spans far tighter than an
-    input-order write — the same footer-stats pruning contract the
-    zorder test pins, via the better curve."""
-    from pyspark.sql import functions as F
-
-    from fhir_etl_spark.operators.layout import hilbert_layout
-    from fhir_etl_spark.session import load_tables
-
-    li = load_tables(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey"
-    )
-    out = f"{tmp_path}/hilbert"
-    hilbert_layout(li, ["l_partkey", "l_suppkey"], bits=8, num_partitions=8).write.parquet(out)
-
-    per_file = (
-        spark.read.parquet(out)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(
-            (F.max("l_partkey") - F.min("l_partkey")).alias("pspan"),
-            (F.max("l_suppkey") - F.min("l_suppkey")).alias("sspan"),
-        )
-        .collect()
-    )
-    assert len(per_file) >= 4
-    full = li.agg(
-        (F.max("l_partkey") - F.min("l_partkey")).alias("p"),
-        (F.max("l_suppkey") - F.min("l_suppkey")).alias("s"),
-    ).first()
-    # every clustered file must cover well under the full key range in
-    # BOTH dimensions (input-order files cover ~the whole range in each)
-    assert all(r["pspan"] <= full["p"] * 0.7 for r in per_file), per_file
-    assert all(r["sspan"] <= full["s"] * 0.7 for r in per_file), per_file
-
-
 def test_hilbert_key_preserves_underscore_h_user_columns(spark):
     """Round-7 review: passthrough is by exact caller-column name — a
     user column that happens to start with `_h` must survive the walk."""

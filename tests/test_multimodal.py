@@ -1,5 +1,5 @@
 """Multimodal plumbing: real binary columns through Arrow-batched
-mapInPandas, codec-free metadata extraction, stub gating."""
+mapInPandas, codec-free header parsing, stub gating."""
 
 from __future__ import annotations
 
@@ -7,12 +7,7 @@ import struct
 
 import pytest
 
-from fhir_etl_spark.operators.multimodal import (
-    decode_image,
-    extract_media_meta,
-    fake_image_features,
-    sniff_mime,
-)
+from fhir_etl_spark.operators.multimodal import decode_image, sniff_mime
 
 
 def minimal_png(width: int, height: int, bit_depth: int = 8) -> bytes:
@@ -36,38 +31,6 @@ def _media_df(spark):
         (6, b"just some text bytes"),
     ]
     return spark.createDataFrame(rows, "id long, media binary")
-
-
-def test_extract_media_meta(spark):
-    out = {
-        r["id"]: r["media_meta"]
-        for r in extract_media_meta(_media_df(spark)).collect()
-    }
-    assert out[1]["mime"] == "image/png"
-    assert (out[1]["width"], out[1]["height"], out[1]["bit_depth"]) == (640, 480, 8)
-    assert out[2]["mime"] == "image/jpeg"
-    assert out[3]["mime"] == "audio/wav"
-    assert out[4]["mime"] == "video/mp4"
-    assert out[5] is None or out[5]["mime"] is None
-    assert out[6]["mime"] == "application/octet-stream"
-    assert out[6]["n_bytes"] == 20
-    assert len(out[6]["digest"]) == 32
-
-
-def test_fake_features_feed_similarity(spark):
-    """binary → feature vector → cosine top-k: the full multimodal-to-ANN
-    pipeline shape with the deterministic fake extractor."""
-    from pyspark.sql import functions as F
-
-    from fhir_etl_spark.operators.similarity import cosine_topk
-
-    df = fake_image_features(_media_df(spark).filter("media is not null"), dim=8)
-    corpus = df.select(F.col("id").alias("vec_id"), F.col("features").alias("embedding"))
-    queries = corpus.filter("vec_id = 1").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    top = cosine_topk(corpus, queries, k=2).collect()
-    assert top[0]["vec_id"] == 1 and top[0]["sim"] == 1.0  # self-match first
 
 
 def test_video_rows_error_contract(spark):
@@ -346,35 +309,16 @@ def minimal_gif(width: int, height: int, bpp: int = 8) -> bytes:
 
 
 def test_image_dimensions_all_formats():
-    """PNG IHDR, JPEG SOF walk, GIF LSD — width/height without PIL."""
-    from fhir_etl_spark.operators.multimodal import (
-        gif_dimensions,
-        image_dimensions,
-        jpeg_dimensions,
-    )
+    """JPEG SOF walk, GIF LSD — width/height without PIL."""
+    from fhir_etl_spark.operators.multimodal import gif_dimensions, jpeg_dimensions
 
-    assert image_dimensions(minimal_png(640, 480)) == (640, 480, 8)
-    assert image_dimensions(minimal_jpeg(1920, 1080)) == (1920, 1080, 8)
-    assert image_dimensions(minimal_gif(320, 200, bpp=8)) == (320, 200, 8)
+    assert jpeg_dimensions(minimal_jpeg(1920, 1080)) == (1920, 1080, 8)
+    assert gif_dimensions(minimal_gif(320, 200, bpp=8)) == (320, 200, 8)
     # truncated/garbage inputs return Nones, never raise
     assert jpeg_dimensions(b"\xff\xd8\xff") == (None, None, None)
     assert gif_dimensions(b"GIF89a\x01") == (None, None, None)
-    assert image_dimensions(b"random bytes") == (None, None, None)
-
-
-def test_extract_media_meta_jpeg_gif(spark):
-    """The mapInPandas metadata pass fills width/height for all three
-    header-parsed formats in one batch."""
-    from fhir_etl_spark.operators.multimodal import extract_media_meta
-
-    df = spark.createDataFrame(
-        [(1, minimal_png(64, 32)), (2, minimal_jpeg(800, 600)), (3, minimal_gif(10, 20))],
-        "id long, media binary",
-    )
-    out = {r["id"]: r["media_meta"] for r in extract_media_meta(df).collect()}
-    assert (out[1]["mime"], out[1]["width"], out[1]["height"]) == ("image/png", 64, 32)
-    assert (out[2]["mime"], out[2]["width"], out[2]["height"]) == ("image/jpeg", 800, 600)
-    assert (out[3]["mime"], out[3]["width"], out[3]["height"]) == ("image/gif", 10, 20)
+    for parse in (jpeg_dimensions, gif_dimensions):
+        assert parse(b"random bytes") == (None, None, None)
 
 
 def minimal_wav(
@@ -400,28 +344,6 @@ def test_wav_audio_meta_unit():
     # truncated/garbage inputs return Nones, never raise
     assert wav_audio_meta(b"RIFF\x00\x00\x00\x00WAVE") == (None, None, None, None)
     assert wav_audio_meta(b"not audio") == (None, None, None, None)
-
-
-def test_extract_media_meta_wav(spark):
-    """Audio rows fill sample_rate/channels/duration; image rows leave the
-    audio fields NULL — one metadata pass covers both modalities."""
-    from fhir_etl_spark.operators.multimodal import extract_media_meta
-
-    df = spark.createDataFrame(
-        [(1, minimal_wav(44100, 1, 16, n_frames=22050)), (2, minimal_png(8, 8))],
-        "id long, media binary",
-    )
-    out = {r["id"]: r["media_meta"] for r in extract_media_meta(df).collect()}
-    assert out[1]["mime"] == "audio/wav"
-    assert (out[1]["sample_rate"], out[1]["channels"], out[1]["bit_depth"]) == (44100, 1, 16)
-    assert out[1]["duration_ms"] == 500
-    assert out[2]["sample_rate"] is None and out[2]["duration_ms"] is None
-    assert out[2]["width"] == 8
-
-
-# --------------------------------------------------------------------------
-# Baseline JPEG codec (functions/jpeg.py, round 5)
-# --------------------------------------------------------------------------
 
 
 def test_jpeg_constant_tiles_match_closed_form():
@@ -568,10 +490,10 @@ def test_resize_image_jpeg_input_emits_png(spark):
 
 
 def test_mp4_mux_demux_unit():
-    """Muxer → parser round trip: metadata fields, every sample's bytes
-    resolved through stsz × stsc × stco, stss sync flags, partial trailing
-    chunks, and the all-sync default when stss is absent."""
-    from fhir_etl_spark.functions.mp4 import mp4_metadata, mp4_samples, mux_mp4
+    """Muxer → parser round trip: every sample's bytes resolved through
+    stsz × stsc × stco, stss sync flags, partial trailing chunks, and the
+    all-sync default when stss is absent."""
+    from fhir_etl_spark.functions.mp4 import mp4_samples, mux_mp4
 
     samples = [bytes([i] * (10 + i)) for i in range(7)]
     for chunk_size in (1, 2, 3, 7, 10):
@@ -584,18 +506,11 @@ def test_mp4_mux_demux_unit():
         for r in rs:
             assert data[r["offset"] : r["offset"] + r["size"]] == samples[r["index"]]
             assert r["keyframe"] == (r["index"] % 2 == 0)
-    meta = mp4_metadata(data)
-    assert meta["n_tracks"] == 1 and meta["timescale"] == 30_000
-    assert meta["duration_ms"] == 7 * 1000 * 1000 // 30_000
-    t = meta["tracks"][0]
-    assert (t["width"], t["height"], t["codec"], t["n_samples"]) == (
-        320, 240, "avc1", 7,
-    )
     # no stss ⇒ every sample is a sync sample
     assert all(r["keyframe"] for r in mp4_samples(mux_mp4(samples)))
     # corrupt inputs raise (operator catches per-row)
     with pytest.raises(ValueError):
-        mp4_metadata(b"\x00\x00\x00\x08free")
+        mp4_samples(b"\x00\x00\x00\x08free")
     with pytest.raises(ValueError):
         mp4_samples(data[:40])
 
@@ -624,33 +539,10 @@ def test_sample_video_frames_real_mp4(spark):
     assert all(r["keyframe"] for r in keys)
 
 
-def test_extract_media_meta_mp4(spark):
-    """MP4 rows fill width/height/duration via the box walk; the loose
-    ftyp sniff on corrupt bytes leaves meta NULL instead of failing."""
-    from fhir_etl_spark.functions.mp4 import mux_mp4
-    from fhir_etl_spark.operators.multimodal import extract_media_meta
-
-    good = mux_mp4([b"x" * 20] * 30, width=640, height=360)
-    df = spark.createDataFrame(
-        [(1, good), (2, b"\x00\x00\x00\x18ftypmp42" + b"\x00" * 16)],
-        "id long, media binary",
-    )
-    out = {r["id"]: r["media_meta"] for r in extract_media_meta(df).collect()}
-    assert out[1]["mime"] == "video/mp4"
-    assert (out[1]["width"], out[1]["height"]) == (640, 360)
-    assert out[1]["duration_ms"] == 30 * 1000 * 1000 // 30_000
-    assert out[2]["mime"] == "video/mp4" and out[2]["duration_ms"] is None
-
-
-# --------------------------------------------------------------------------
-# WebM/Matroska container tier (functions/webm.py, round 5)
-# --------------------------------------------------------------------------
-
-
 def test_webm_mux_demux_unit():
-    """EBML muxer → parser round trip: metadata, per-block bytes, cluster
-    + relative timestamps, keyframe flags, laced-block rejection."""
-    from fhir_etl_spark.functions.webm import mux_webm, webm_metadata, webm_samples
+    """EBML muxer → parser round trip: per-block bytes, cluster + relative
+    timestamps, keyframe flags, laced-block rejection."""
+    from fhir_etl_spark.functions.webm import mux_webm, webm_samples
 
     frames = [bytes([50 + i] * (12 + i)) for i in range(7)]
     for fpc in (1, 2, 3, 7, 10):
@@ -664,12 +556,6 @@ def test_webm_mux_demux_unit():
             assert data[r["offset"] : r["offset"] + r["size"]] == frames[r["index"]]
             assert r["timestamp"] == r["index"] * 33, fpc  # cluster + s16 rel
             assert r["keyframe"] == (r["index"] % 3 == 0)
-    meta = webm_metadata(data)
-    assert meta["n_tracks"] == 1 and meta["duration_ms"] == 7 * 33
-    t = meta["tracks"][0]
-    assert (t["codec"], t["width"], t["height"], t["track_type"]) == (
-        "V_VP8", 320, 180, 1,
-    )
     # laced SimpleBlock (flags bit 0x02/0x06) rejected loudly
     laced = bytearray(mux_webm(frames[:1]))
     i = laced.rfind(b"\x81\x00\x00")  # block header: track varint + rel ts
@@ -677,7 +563,7 @@ def test_webm_mux_demux_unit():
     with pytest.raises(ValueError, match="laced"):
         webm_samples(bytes(laced))
     with pytest.raises(ValueError):
-        webm_metadata(b"\x00\x00\x00\x00")
+        webm_samples(b"\x00\x00\x00\x00")
 
 
 def test_sample_video_frames_webm(spark):
@@ -702,18 +588,6 @@ def test_sample_video_frames_webm(spark):
     ]
     mp4_rows = [r for r in out if r["id"] == 2]
     assert len(mp4_rows) == 1 and mp4_rows[0]["timestamp_ms"] is None
-
-
-def test_extract_media_meta_webm(spark):
-    from fhir_etl_spark.functions.webm import mux_webm
-    from fhir_etl_spark.operators.multimodal import extract_media_meta, sniff_mime
-
-    data = mux_webm([b"x" * 10] * 6, width=640, height=360)
-    assert sniff_mime(data) == "video/webm"
-    df = spark.createDataFrame([(1, data)], "id long, media binary")
-    meta = extract_media_meta(df).collect()[0]["media_meta"]
-    assert meta["mime"] == "video/webm"
-    assert (meta["width"], meta["height"], meta["duration_ms"]) == (640, 360, 6 * 33)
 
 
 def test_jpeg_progressive_equals_baseline():
@@ -849,16 +723,15 @@ def test_codec_fuzz_random_bytes_fail_cleanly():
 
     from fhir_etl_spark.functions.gif import decode_gif
     from fhir_etl_spark.functions.jpeg import decode_jpeg
-    from fhir_etl_spark.functions.mp4 import mp4_metadata, mp4_samples
+    from fhir_etl_spark.functions.mp4 import mp4_samples
     from fhir_etl_spark.functions.png import decode_png
-    from fhir_etl_spark.functions.webm import webm_metadata, webm_samples
+    from fhir_etl_spark.functions.webm import webm_samples
 
     rng = np.random.default_rng(13)
     magics = [b"", b"\xff\xd8\xff", b"\x89PNG\r\n\x1a\n",
               b"\x00\x00\x00\x18ftypisom", b"\x1a\x45\xdf\xa3", b"RIFF",
               b"GIF89a"]
-    parsers = [decode_jpeg, decode_png, decode_gif, mp4_metadata, mp4_samples,
-               webm_metadata, webm_samples]
+    parsers = [decode_jpeg, decode_png, decode_gif, mp4_samples, webm_samples]
     for trial in range(120):
         blob = (magics[trial % len(magics)]
                 + rng.integers(0, 256, trial % 400, dtype=np.uint8).tobytes())

@@ -1,5 +1,5 @@
 """Fixture-free output pins for the FHIR output path: the exact Group JSON
-of both cohorts (full and shell form) and the exact bytes the NDJSON sink
+of both cohorts (with the member array) and the exact bytes the NDJSON sink
 and both upsert modes write — the upsert's against a Python dict model of
 the reference's. The golden-parity suites need the reference
 checkout; these need nothing, so any refactor of the sinks or the Group
@@ -87,13 +87,11 @@ def _group_line(df) -> str:
 def test_group_1kg_exact_json(spark):
     members = _members(spark)
     assert _group_line(group_1kg(members)) == _line({**GROUP_1KG_SHELL, "member": MEMBERS})
-    assert _group_line(group_1kg(members, include_member=False)) == _line(GROUP_1KG_SHELL)
 
 
 def test_group_gtex_exact_json(spark):
     members = _members(spark)
     assert _group_line(group_gtex(members)) == _line({**GROUP_GTEX_SHELL, "member": MEMBERS})
-    assert _group_line(group_gtex(members, include_member=False)) == _line(GROUP_GTEX_SHELL)
 
 
 def _resources(spark, rows):

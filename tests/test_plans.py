@@ -9,6 +9,7 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from fhir_etl_spark.queries import all_queries
 
@@ -80,11 +81,25 @@ def test_fhirize_is_pure_projection(spark):
 
 def test_text_features_no_python(spark):
     """Text analysis stays JVM-side (no Python eval nodes in the plan)."""
+    from fhir_etl_spark.operators.text import (
+        bpe_ish_token_count,
+        fingerprint,
+        lang_id,
+        quality_score,
+        token_count,
+    )
     from fhir_etl_spark.session import load_tables
-    from fhir_etl_spark.operators.text import with_text_features
 
     docs = load_tables(spark, SF, "documents")
-    plan = formatted_plan(spark, with_text_features(docs))
+    text = F.col("text")
+    features = docs.withColumns({
+        "n_tokens": token_count(text),
+        "n_bpe_tokens": bpe_ish_token_count(text),
+        "quality": quality_score(text),
+        "lang_pred": lang_id(text),
+        "fingerprint": fingerprint(text),
+    })
+    plan = formatted_plan(spark, features)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "Exchange" not in plan  # pure projection
 

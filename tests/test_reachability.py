@@ -1,22 +1,54 @@
-"""Every module under ``fhir_etl_spark/`` is reached from an entry point.
+"""Every module and every top-level function or class under
+``fhir_etl_spark/`` is reached from an entry point.
 
-A pure-``ast`` import walk (no Spark, no imports executed) starts at the
-CLI, the pipelines, the query registry, the driver contract
+Pure ``ast``, no Spark, no imports executed. The entry points are the CLI,
+the pipelines, the query registry, the driver contract
 (``__spark_entry__.py``), ``bench.py`` and the benchmark's ``perfbench/``
-scripts, and follows every ``import`` / ``from … import`` — including
-imports inside functions. Importing ``a.b.c`` also runs ``a`` and
-``a.b``'s ``__init__``, so parents count as reached. A module no entry
-point reaches is code only its own tests use: delete it with its tests,
-or give it a caller.
+scripts.
+
+- **Modules.** An import walk from the entry files follows every
+  ``import`` / ``from … import``, including imports inside functions.
+  Importing ``a.b.c`` also runs ``a`` and ``a.b``'s ``__init__``, so
+  parents count as reached.
+- **Functions and classes.** A name walk over the reached modules starts
+  at their module-level code (decorators and default values included),
+  every def in the entry files, every ``@query``-registered def, and every
+  string constant in ``perfbench/`` (its tracer looks functions up by
+  name). Each name or attribute it meets reaches every top-level def of
+  that name; a reached def's body is walked in turn.
+
+What neither walk reaches is code only its own tests use: delete it with
+its tests, or give it a caller. The one exception is an independent
+reference model that a test checks the program against; it is listed in
+``REFERENCE_MODELS`` with that test.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "fhir_etl_spark"
+
+# unreached def → the test that compares the program against it
+REFERENCE_MODELS = {
+    "fhir_uuid5_udf": "tests/test_identity.py::test_sql_udf_cpython_tripartite",
+    "fold_py": "tests/test_unicode_fold.py::test_spark_matches_python_reference",
+    "snapshot_history": "tests/test_versioned.py::test_time_travel",
+    "structural_roundtrip": "tests/test_cli_schemas.py::test_structural_roundtrip_on_pipeline_output",
+    "dc_only_pixel": "tests/test_multimodal.py::test_jpeg_constant_tiles_match_closed_form",
+    "luma_histogram": "tests/test_multimodal.py::test_gif_frame_luma_histograms_matches_composition",
+    "jpeg_dimensions": "tests/test_multimodal.py::test_jpeg_roundtrip_error_bounded",
+}
+
+_DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+@functools.cache
+def _tree(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), str(path))
 
 
 def _module_name(path: Path) -> str:
@@ -39,7 +71,7 @@ def _imported_names(path: Path) -> set[str]:
     ``from x import`` base, and ``x.y`` for every ``from x import y``
     (``y`` may be a submodule). The package uses absolute imports only."""
     names: set[str] = set()
-    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+    for node in ast.walk(_tree(path)):
         if isinstance(node, ast.Import):
             names.update(a.name for a in node.names)
         elif isinstance(node, ast.ImportFrom) and node.module:
@@ -60,7 +92,8 @@ def _roots() -> list[Path]:
     ]
 
 
-def reached_modules() -> set[str]:
+@functools.cache
+def reached_modules() -> frozenset[str]:
     roots = _roots()
     reached = {_module_name(p) for p in roots if p.is_relative_to(ROOT / PKG)}
     todo = list(roots)
@@ -75,7 +108,79 @@ def reached_modules() -> set[str]:
                 if target is not None and mod not in reached:
                     reached.add(mod)
                     todo.append(target)
-    return reached
+    return frozenset(reached)
+
+
+def _names(node: ast.AST) -> set[str]:
+    """Every identifier ``node`` loads: bare names and attribute names."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+    return out
+
+
+def _registered(node: ast.AST) -> bool:
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "query"
+        for d in node.decorator_list
+    )
+
+
+def _import_time(node: ast.AST) -> list[ast.AST]:
+    """The parts of a top-level def that run when its module is imported."""
+    parts = list(node.decorator_list)
+    if isinstance(node, ast.ClassDef):
+        return parts + node.bases + [k.value for k in node.keywords]
+    return parts + node.args.defaults + [d for d in node.args.kw_defaults if d]
+
+
+@functools.cache
+def unreached_defs() -> tuple[str, ...]:
+    """``module::name`` of every top-level def or class in a reached package
+    module that the name walk does not reach."""
+    entries = set(_roots())
+    files = entries | {_module_path(m) for m in reached_modules()}
+    defs: dict[str, list[tuple[Path, ast.AST]]] = {}
+    todo: list[ast.AST] = []
+    seen: set[int] = set()
+    strings: set[str] = set()
+    for path in files:
+        tree = _tree(path)
+        for node in tree.body:
+            if not isinstance(node, _DEF):
+                todo.append(node)
+                continue
+            defs.setdefault(node.name, []).append((path, node))
+            if path in entries or _registered(node):
+                todo.append(node)
+                seen.add(id(node))
+            else:
+                todo.extend(_import_time(node))
+        if path.parent.name == "perfbench":
+            strings.update(
+                n.value for n in ast.walk(tree)
+                if isinstance(n, ast.Constant) and isinstance(n.value, str)
+            )
+
+    def reach(names):
+        for name in names:
+            for _, node in defs.get(name, ()):
+                if id(node) not in seen:
+                    seen.add(id(node))
+                    todo.append(node)
+
+    reach(strings)
+    while todo:
+        reach(_names(todo.pop()))
+    return tuple(sorted(
+        f"{_module_name(path)}::{node.name}"
+        for found in defs.values()
+        for path, node in found
+        if id(node) not in seen and path.is_relative_to(ROOT / PKG)
+    ))
 
 
 def test_every_package_module_is_reached_from_an_entry_point():
@@ -86,3 +191,24 @@ def test_every_package_module_is_reached_from_an_entry_point():
         "pipeline, registered query, __spark_entry__.py, bench.py or "
         "perfbench/ script:\n  " + "\n  ".join(unreached)
     )
+
+
+def test_every_top_level_def_is_reached_or_a_reference_model():
+    unreached = [d for d in unreached_defs() if d.split("::")[1] not in REFERENCE_MODELS]
+    assert not unreached, (
+        f"{len(unreached)} top-level def(s) under {PKG}/ are reached from no "
+        "entry point (delete them with their tests, or list an independent "
+        "reference model in REFERENCE_MODELS):\n  " + "\n  ".join(unreached)
+    )
+
+
+def test_reference_models_are_unreached_and_used_by_their_test():
+    unreached = {d.split("::")[1] for d in unreached_defs()}
+    for name, test in REFERENCE_MODELS.items():
+        assert name in unreached, f"{name} is reached now: drop it from REFERENCE_MODELS"
+        path, test_name = test.split("::")
+        (fn,) = [
+            n for n in _tree(ROOT / path).body
+            if isinstance(n, ast.FunctionDef) and n.name == test_name
+        ]
+        assert name in _names(fn), f"{test} does not use {name}"

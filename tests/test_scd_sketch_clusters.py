@@ -61,36 +61,6 @@ def test_dedup_clusters_and_representatives(spark):
     assert kept == [1, 5, 6, 7]
 
 
-def test_count_min_sketch_bounds(spark):
-    from fhir_etl_spark.operators.sketch import (
-        cms_estimate,
-        count_min_sketch,
-        heavy_hitters_exact,
-    )
-    from fhir_etl_spark.session import load_tables
-
-    orders = load_tables(spark, "/root/testdata/sf0.001", "orders")
-    sketch = count_min_sketch(orders, "o_orderpriority")
-    exact = {
-        r["o_orderpriority"]: r["freq"]
-        for r in heavy_hitters_exact(orders, "o_orderpriority", k=10).collect()
-    }
-    estimates = cms_estimate(spark, sketch, list(exact))
-    for item, true_count in exact.items():
-        # CMS never under-counts; eps=0.001 over 1500 rows → tight
-        assert estimates[item] >= true_count
-        assert estimates[item] <= true_count + 0.01 * 1500
-
-
-def test_distinct_sketch_accuracy(spark):
-    from fhir_etl_spark.operators.sketch import distinct_sketch
-    from fhir_etl_spark.session import load_tables
-
-    customer = load_tables(spark, "/root/testdata/sf0.001", "customer")
-    approx = distinct_sketch(customer, "c_custkey").first()["approx_distinct"]
-    exact = customer.select("c_custkey").distinct().count()
-    assert abs(approx - exact) / exact < 0.1
-
 def test_merge_into_row_fates(spark):
     """All five row fates: matched-update, matched-delete, source-only
     insert, source-only delete (never inserted), target-only keep."""
@@ -303,37 +273,6 @@ def test_incremental_agg_update_null_keys_and_values(spark):
         "b": (1, 0, None),    # all values NULL -> SQL sum is NULL, not 0
     }
     assert inc.count() == 3  # the NULL-key group did not duplicate
-
-
-def test_hll_sketch_table_merge_and_accuracy(spark):
-    """The mergeable-sketch contract: per-shard sketches unioned =
-    whole-corpus estimate (within HLL error), overlapping shards do NOT
-    double count (distinct semantics survive the merge), and per-group
-    re-aggregation from finer sketches works."""
-    from pyspark.sql import functions as F
-
-    from fhir_etl_spark.operators.sketch import hll_merge_estimate, hll_sketch_table
-
-    n = 50_000
-    df = spark.range(n).select(
-        (F.col("id") / 12_500).cast("int").alias("shard"),  # 4 blocks
-        (F.col("id") % 10).alias("label"),
-        # 10k distinct values, each appearing 5x across shards (overlap)
-        (F.col("id") % 10_000).alias("v"),
-    )
-    sk = hll_sketch_table(df, ["shard", "label"], "v")
-    assert sk.count() == 40  # 4 shards x 10 labels, ~1.6KB each
-
-    [row] = hll_merge_estimate(sk).collect()
-    assert abs(row["estimate"] - 10_000) / 10_000 < 0.05  # no double count
-
-    per_label = {
-        r["label"]: r["estimate"]
-        for r in hll_merge_estimate(sk, ["label"]).collect()
-    }
-    # each label holds every v with v%10==label: 1000 distinct
-    for label, est in per_label.items():
-        assert abs(est - 1000) / 1000 < 0.08, (label, est)
 
 
 def test_incremental_agg_update_rejects_unknown_op(spark):

@@ -6,12 +6,14 @@
 - ``transform_gtex`` reads each page of its REST sources once, and leaves
   no cached data behind.
 - ``transform_1k_files`` returns its membership counts and raises its VCF
-  header errors as before.
+  header errors as before, and writes its DocumentReferences in listing
+  order with the same bytes at any shuffle-partition setting.
 """
 
 from __future__ import annotations
 
 import json
+import shutil
 from contextlib import contextmanager
 
 import pytest
@@ -140,7 +142,7 @@ def test_transform_gtex_reads_each_rest_page_once(spark, tmp_path):
                 .option("fields", ",".join(f.name for f in schema.fields))
                 .option("pages_per_partition", "1").option("read_log", str(log)).load())
 
-    persistent = len(spark.sparkContext._jsc.getPersistentRDDs())
+    persistent = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     meta = str(tmp_path / "meta")
     transform_gtex(
         spark, pages("subjects", GTEX_SUBJECT), pages("samples", GTEX_SAMPLE),
@@ -153,7 +155,9 @@ def test_transform_gtex_reads_each_rest_page_once(spark, tmp_path):
         [f"{tmp_path / 'subjects'} {p}" for p in range(3)]
         + [f"{tmp_path / 'samples'} {p}" for p in range(3)]
     )
-    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persistent
+    # no RDD the call cached is left; the context cleaner may meanwhile drop
+    # RDDs earlier tests left behind, so the set can shrink
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= persistent
     with open(f"{meta}/Specimen.ndjson") as f:
         assert len(f.readlines()) == 9
     with open(f"{meta}/Group.ndjson") as f:
@@ -204,3 +208,31 @@ def test_transform_1k_files_counts_and_header_errors(spark, tmp_path):
         with pytest.raises(ValueError) as exc:
             transform_1k_files(spark, _listing(spark), str(header), meta)
         assert str(exc.value) == message
+
+
+def test_transform_1k_files_document_references_in_listing_order(spark, tmp_path):
+    """The reference builds ``{id: doc}`` in FTP listing order
+    (document_references.py:155-248), so DocumentReference.ndjson lists the
+    files as the listing does — at shuffle partitions 8 and 16 alike, with
+    partition coalescing off so a hash-ordered shuffle cannot hide."""
+    from fhir_etl_spark.pipelines.onekg import transform_1k_files
+
+    names = [f"ALL.chr{(i * 17) % 44}.part{i:02d}.vcf.gz" for i in range(44)]
+    listing = spark.createDataFrame(
+        [(name, 100 + i, "2014-09-12T14:21:07") for i, name in enumerate(names)],
+        "file string, size bigint, last_modified string",
+    )
+    header = tmp_path / "header"
+    header.write_text(f"{HEADER_COLS}\tHG00096\n")
+    stage1 = _onekg_meta(spark, tmp_path)
+    written = []
+    for partitions in (8, 16):
+        meta = str(tmp_path / f"p{partitions}")
+        shutil.copytree(stage1, meta)
+        with _conf(spark, **{"spark.sql.shuffle.partitions": str(partitions),
+                             "spark.sql.adaptive.coalescePartitions.enabled": "false"}):
+            transform_1k_files(spark, listing, str(header), meta)
+        written.append(_read(f"{meta}/DocumentReference.ndjson"))
+    docs = [json.loads(line) for line in written[0].splitlines()]
+    assert [d["identifier"][0]["value"] for d in docs] == names
+    assert written[0] == written[1]

@@ -122,65 +122,3 @@ def test_validate_dir_compiles_without_codegen_fallback(spark, tmp_path):
     finally:
         spark.conf.set(key, before)
 
-@pytest.mark.skipif(not os.path.isdir(ONEKG_GOLDEN), reason="no reference checkout")
-def test_audit_mode_agrees_with_structural_on_golden(spark):
-    """Audit mode (mapInPandas per-resource validation) must agree with the
-    structural validator on the golden META dirs: same summary, zero errors.
-
-    fhir.resources is absent from this image, so the audit validator is
-    injected — a JSON parse + resourceType/id presence check, i.e. the
-    audit PLUMBING (Arrow batching, error routing, summary subtraction) is
-    exercised with a validator the golden dirs are known to satisfy."""
-    import json
-
-    def structural_equivalent(raw: str) -> str | None:
-        try:
-            d = json.loads(raw)
-        except Exception:
-            return "pydantic:ParseError"
-        if not isinstance(d.get("resourceType"), str) or not isinstance(d.get("id"), str):
-            return "pydantic:ValidationError:missing resourceType/id"
-        return None
-
-    plain = validate_dir(spark, ONEKG_GOLDEN)
-    audited = validate_dir(spark, ONEKG_GOLDEN, audit=True, validator=structural_equivalent)
-    assert audited.summary == plain.summary
-    assert audited.ok
-
-
-def test_audit_mode_routes_failures_to_errors(spark, tmp_path):
-    """A validator rejection lands in the errors side-output and is
-    subtracted from the summary, even when the structural tier passes."""
-    good_id = "fb96f2a9-8ec2-5784-ba62-16f168155434"
-    f = tmp_path / "Patient.ndjson"
-    f.write_text(
-        "\n".join(
-            [
-                f'{{"resourceType": "Patient", "id": "{good_id}", "identifier": [{{"value": "ok"}}], "deep": "fine"}}',
-                f'{{"resourceType": "Patient", "id": "{good_id[:-1]}3", "identifier": [{{"value": "x"}}], "deep": "bad"}}',
-            ]
-        )
-    )
-
-    def reject_deep_bad(raw: str) -> str | None:
-        return "pydantic:ValidationError:deep" if '"deep": "bad"' in raw else None
-
-    result = validate_dir(spark, str(tmp_path), audit=True, validator=reject_deep_bad)
-    assert result.summary == {"Patient": 1}
-    errs = result.errors.collect()
-    assert len(errs) == 1 and errs[0]["error"] == "pydantic:ValidationError:deep"
-
-
-def test_audit_mode_gated_without_fhir_resources(spark, tmp_path):
-    """With no validator injected and fhir.resources absent, audit mode
-    raises NotImplementedError (an honest gate, not a silent skip)."""
-    f = tmp_path / "Patient.ndjson"
-    f.write_text('{"resourceType": "Patient", "id": "x"}')
-    try:
-        import fhir.resources  # noqa: F401
-
-        pytest.skip("fhir.resources installed — gate not reachable")
-    except ImportError:
-        pass
-    with pytest.raises(NotImplementedError, match="fhir.resources"):
-        validate_dir(spark, str(tmp_path), audit=True)

@@ -1,5 +1,5 @@
 """Snapshot-versioned tables: time travel, append/overwrite lineage,
-atomic-commit invariants, vacuum."""
+atomic-commit invariants."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ import pytest
 from fhir_etl_spark.sinks.versioned import (
     read_snapshot,
     snapshot_history,
-    vacuum,
     write_snapshot,
 )
 
@@ -55,20 +54,6 @@ def test_old_files_never_rewritten(spark, tmp_path):
         assert os.path.getmtime(os.path.join(data_root, rel)) == mtime
 
 
-def test_vacuum_drops_unreferenced(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    write_snapshot(_df(spark, [1]), t, mode="overwrite")
-    write_snapshot(_df(spark, [2]), t, mode="overwrite")  # v0's dir now unreferenced by v1
-    # orphan from an "interrupted commit"
-    orphan = os.path.join(t, "data", "v99-dead")
-    os.makedirs(orphan)
-    deleted = vacuum(t, keep_last=1)
-    assert len(deleted) == 2 and any("v99-dead" in d for d in deleted)
-    assert {r["id"] for r in read_snapshot(spark, t).collect()} == {2}
-    with pytest.raises(ValueError):
-        read_snapshot(spark, t, version=0)  # manifest gone
-
-
 def test_concurrent_writer_conflict_is_loud(spark, tmp_path, monkeypatch):
     """Two writers racing to the same version: the exclusive hard-link
     publish makes the loser raise ConcurrentWriteError — never a silent
@@ -83,10 +68,11 @@ def test_concurrent_writer_conflict_is_loud(spark, tmp_path, monkeypatch):
     with pytest.raises(V.ConcurrentWriteError):
         write_snapshot(_df(spark, [2]), t)  # races for v0 → EEXIST → loud
     monkeypatch.setattr(V, "_versions", real_versions)
-    # the winner's commit is untouched; the loser left only a vacuumable orphan
+    # the winner's commit is untouched; the loser left only an orphan data dir
     assert {r["id"] for r in read_snapshot(spark, t).collect()} == {1}
     assert [h["version"] for h in snapshot_history(t)] == [0]
-    assert len(vacuum(t, keep_last=1)) == 1  # the loser's orphan data dir
+    data_dirs = {os.path.join("data", d) for d in os.listdir(os.path.join(t, "data"))}
+    assert len(data_dirs - set(V._load_manifest(t, 0)["data_dirs"])) == 1
 
 
 def test_concurrent_writer_retry_republishes_without_rerunning_job(
@@ -143,22 +129,6 @@ def test_two_threads_racing_appends_both_land(spark, tmp_path):
     assert {r[1] for r in results.values()} == {0, 1}
     assert {r["id"] for r in read_snapshot(spark, t).collect()} == {1, 2}
     assert [h["version"] for h in snapshot_history(t)] == [0, 1]
-
-
-def test_vacuum_during_read_pinned_retained_reader_is_safe(spark, tmp_path):
-    """Vacuum never deletes a directory referenced by a retained snapshot:
-    a reader pinned at the retained latest survives a concurrent vacuum;
-    a reader pinned at a vacuumed version fails LOUDLY at action time
-    (missing files), never returns silently wrong rows."""
-    t = str(tmp_path / "tbl")
-    write_snapshot(_df(spark, [1]), t, mode="overwrite")  # v0
-    write_snapshot(_df(spark, [2]), t, mode="overwrite")  # v1
-    pinned_latest = read_snapshot(spark, t)  # pins v1's file set
-    pinned_old = read_snapshot(spark, t, version=0)  # pins v0's file set
-    vacuum(t, keep_last=1)
-    assert {r["id"] for r in pinned_latest.collect()} == {2}
-    with pytest.raises(Exception):
-        pinned_old.collect()
 
 
 def test_errors(spark, tmp_path):
