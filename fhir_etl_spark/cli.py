@@ -5,8 +5,8 @@ The reference fetches sources inline over the network; this CLI stages any
 URL input into the bronze zone first (sources/stage.py) and then reads the
 staged copy (SURVEY.md §4.4) so runs are reproducible and restartable.
 Pass ``--sample-info`` / ``--annotations`` as either a local path or an
-https:// URL (the reference's own source URLs are the defaults to reach
-for: stage.ONEKG_SAMPLE_INFO_URL, stage.GTEX_SAMPLE_ATTRIBUTES_URL).
+https:// URL (the reference's own source URLs, quoted in
+sources/stage.py's docstring, are the ones to reach for).
 argparse, not click — zero extra dependencies.
 """
 

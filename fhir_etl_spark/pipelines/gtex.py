@@ -9,6 +9,8 @@ normalized broadcast semi join instead of Python set algebra.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -22,6 +24,7 @@ from fhir_etl_spark.operators.fhirize_gtex import (
     gtex_mint,
     research_study_gtex,
 )
+from fhir_etl_spark.pipelines import run_concurrently
 from fhir_etl_spark.sinks.ndjson import write_ndjson
 
 
@@ -84,11 +87,13 @@ def transform_gtex(
     - filelist: the nested fileList payload (S4), staged
     - annotations: the SampleAttributesDS TSV (S2), staged
 
-    Each REST source feeds two outputs (subjects: Patient and
-    ResearchSubject; samples: Specimen and the Group membership), so both
-    are cached for the call: the first write that reads one scans it at its
-    own partitioning and fills the cache, the second reads the cache. Both
-    are unpersisted before returning.
+    The six files are written concurrently. Each REST source feeds two of
+    them (subjects: Patient and ResearchSubject; samples: Specimen and the
+    Group membership), so both are cached for the call. The cache is filled
+    once even under concurrent writes: the first task to compute a cached
+    partition holds its block's write lock, and a concurrent task that needs
+    the same partition waits for it and reads the cached block, so each
+    page is still fetched once. Both are unpersisted before returning.
     """
     subjects, samples = subjects.cache(), samples.cache()
     try:
@@ -102,7 +107,10 @@ def transform_gtex(
             "ResearchStudy": research_study_gtex(spark),
             "Group": group_gtex(members),
         }
-        return {rtype: write_ndjson(df, meta_dir, rtype) for rtype, df in outputs.items()}
+        return run_concurrently(spark, {
+            rtype: functools.partial(write_ndjson, df, meta_dir, rtype)
+            for rtype, df in outputs.items()
+        })
     finally:
         subjects.unpersist()
         samples.unpersist()

@@ -31,6 +31,7 @@ from fhir_etl_spark.operators.membership import (
     specimen_identifier_values,
     vcf_header_sample_ids,
 )
+from fhir_etl_spark.pipelines import run_concurrently
 from fhir_etl_spark.schemas import systems as S
 from fhir_etl_spark.sinks.ndjson import write_ndjson
 from fhir_etl_spark.sinks.upsert import create_or_extend
@@ -45,7 +46,8 @@ def read_sample_info(spark: SparkSession, path: str) -> DataFrame:
 
 def transform_1k(spark: SparkSession, sample_info_path: str, meta_dir: str) -> dict[str, str]:
     """Stage 1 (reference transform_1k): sample_info → Patient /
-    ResearchSubject / Specimen / ResearchStudy NDJSON."""
+    ResearchSubject / Specimen / ResearchStudy NDJSON, the four files
+    written concurrently."""
     sample_info = read_sample_info(spark, sample_info_path)
     outputs = {
         "Patient": fhirize_patient_1kg(sample_info),
@@ -53,9 +55,10 @@ def transform_1k(spark: SparkSession, sample_info_path: str, meta_dir: str) -> d
         "Specimen": fhirize_specimen_1kg(sample_info),
         "ResearchStudy": research_study_1kg(spark),
     }
-    return {
-        rtype: write_ndjson(df, meta_dir, rtype) for rtype, df in outputs.items()
-    }
+    return run_concurrently(spark, {
+        rtype: functools.partial(write_ndjson, df, meta_dir, rtype)
+        for rtype, df in outputs.items()
+    })
 
 
 def transform_1k_files(
@@ -70,6 +73,8 @@ def transform_1k_files(
     ``ftp_listing`` columns: file STRING, size BIGINT, last_modified STRING
     (ISO-8601, no offset) — the staged form of the FTP NLST/SIZE/MDTM scan
     (document_references.py:125-153).
+
+    The two upserts and the membership-count query run concurrently.
     """
     # P3 substring filter + P5 dropna (document_references.py:132-134,156)
     files = ftp_listing.filter(F.lower(F.col("file")).contains("vcf")).na.drop(
@@ -95,12 +100,17 @@ def transform_1k_files(
     # semantics); the plan stays narrow, so its arrival order is listing order.
     doc_refs = stamp_subject(fhirize_document_reference_1kg(files), "Group", group_id)
 
-    create_or_extend(spark, doc_refs, meta_dir, "DocumentReference", update_existing=False)
-    create_or_extend(spark, group, meta_dir, "Group", update_existing=False)
-
     # the three counts in one query
     parts = {"header_ids": header_ids, "found": found, "missing": missing}
     tagged = functools.reduce(
         DataFrame.unionAll, [df.select(F.lit(k).alias("k")) for k, df in parts.items()]
     )
-    return tagged.agg(*[F.count_if(F.col("k") == k).alias(k) for k in parts]).first().asDict()
+    counts = tagged.agg(*[F.count_if(F.col("k") == k).alias(k) for k in parts])
+
+    return run_concurrently(spark, {
+        "DocumentReference": lambda: create_or_extend(
+            spark, doc_refs, meta_dir, "DocumentReference", update_existing=False
+        ),
+        "Group": lambda: create_or_extend(spark, group, meta_dir, "Group", update_existing=False),
+        "counts": lambda: counts.first().asDict(),
+    })["counts"]

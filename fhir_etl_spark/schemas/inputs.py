@@ -9,25 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# 1.1 onekg_sample_info (TSV; the six consumed columns — extras tolerated)
-ONEKG_SAMPLE_INFO_COLUMNS = (
-    "Sample",
-    "Gender",
-    "Population",
-    "Population Description",
-    "DNA Source from Coriell",
-    "Main project LC platform",
-)
-
-# 1.2 ftp_listing
-FTP_LISTING = T.StructType(
-    [
-        T.StructField("file", T.StringType()),
-        T.StructField("size", T.LongType()),
-        T.StructField("last_modified", T.StringType()),
-    ]
-)
-
 # 1.4 gtex_subject (paginated REST payload)
 GTEX_SUBJECT = T.StructType(
     [

@@ -74,7 +74,6 @@ ONEKG_STUDY_TITLE = "1000 Genomes Project Sample Metadata"
 # 'https://' + GTEX_SITE + 'downloads/adult-gtex/metadata' (single scheme —
 # GTEX_SITE has none), used for every GTEx resource id.
 GTEX_METADATA_SYSTEM = "https://gtexportal.org/home/downloads/adult-gtex/metadata"
-GTEX_API_DATASET = "https://gtexportal.org/api/v2/dataset/"
 GTEX_FILELIST_SYSTEM = "https://gtexportal.org/api/v2/dataset/fileList"
 GTEX_OVERVIEW_SYSTEM = "https://gtexportal.org/home/downloads/adult-gtex/overview"
 GTEX_STORAGE_BASE = "https://storage.googleapis.com/adult-gtex/"

@@ -2,10 +2,12 @@
 
 The reference NLSTs a directory then issues a serial SIZE + MDTM per file
 (document_references.py:125-153). Here the listing is planned on the driver
-and the per-file metadata calls are spread across partitions — each
-executor opens its own FTP connection for its slice of files. The
-reference's error-defaulting is kept: SIZE failure → 0, MDTM failure →
-now() (COALESCE semantics, utils.py:80-88).
+and cut into one contiguous slice per core (``min(files, cores)`` input
+partitions, ``sources.contiguous_ranges``), so the per-file metadata calls
+run in parallel, each executor on its own FTP connection, and
+partition-major row order is listing order. The reference's
+error-defaulting is kept: SIZE failure → 0, MDTM failure → now()
+(COALESCE semantics, utils.py:80-88).
 
 Transports:
 - ``fixture_json``: a staged JSON file ``{name: {"size": n, "mdtm": "213
@@ -20,6 +22,9 @@ from datetime import datetime
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
+
+from fhir_etl_spark.session import default_parallelism
+from fhir_etl_spark.sources import contiguous_ranges
 
 FTP_LISTING_SCHEMA = "file string, size long, last_modified string"
 
@@ -39,7 +44,6 @@ class FtpListingReader(DataSourceReader):
         self.fixture_json = options.get("fixture_json")
         self.host = options.get("host")
         self.directory = options.get("directory", "/")
-        self.files_per_partition = int(options.get("files_per_partition", "16"))
         if not self.fixture_json and not self.host:
             raise ValueError("ftp_listing requires fixture_json or host")
 
@@ -58,9 +62,9 @@ class FtpListingReader(DataSourceReader):
 
     def partitions(self):
         files = self._list_files()
-        step = self.files_per_partition
-        return [FileSlice(files[i : i + step]) for i in range(0, len(files), step)] or [
-            FileSlice([])
+        return [
+            FileSlice(files[r.start : r.stop])
+            for r in contiguous_ranges(len(files), default_parallelism())
         ]
 
     def read(self, partition: FileSlice):

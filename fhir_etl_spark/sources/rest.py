@@ -3,8 +3,10 @@
 The reference fetches GTEx REST pages SERIALLY — ~436 pages × 100 items in
 one Python loop (gtex_fhirizer.py:53-75, with a "come back the next day"
 comment for failures). Here pagination IS partition planning: the PySpark 4
-Python DataSource maps page ranges to input partitions, so executors fetch
-pages in parallel with per-request retry/backoff.
+Python DataSource cuts the pages into one contiguous range per core
+(``min(pages, cores)`` input partitions, ``sources.contiguous_ranges``), so
+executors fetch pages in parallel with per-request retry/backoff, and
+partition-major row order is page order.
 
 Two transports, chosen by option:
 - ``fixture_dir``: staged page files ``page_<n>.json`` (offline tests and
@@ -31,6 +33,9 @@ import time
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
+
+from fhir_etl_spark.session import default_parallelism
+from fhir_etl_spark.sources import contiguous_ranges
 
 
 class PageRange(InputPartition):
@@ -62,7 +67,6 @@ class PaginatedRestReader(DataSourceReader):
         self.endpoint = options.get("endpoint")
         self.dataset_id = options.get("dataset_id", "gtex_v10")
         self.items_per_page = int(options.get("items_per_page", "100"))
-        self.pages_per_partition = int(options.get("pages_per_partition", "8"))
         self.retries = int(options.get("retries", "3"))
         self.backoff_s = float(options.get("backoff_s", "1.0"))
         if not self.fixture_dir and not self.endpoint:
@@ -82,11 +86,8 @@ class PaginatedRestReader(DataSourceReader):
         return int(first["paging_info"]["numberOfPages"])
 
     def partitions(self):
-        n = self._num_pages()
-        step = self.pages_per_partition
-        return [PageRange(i, min(i + step, n)) for i in range(0, n, step)] or [
-            PageRange(0, 0)
-        ]
+        ranges = contiguous_ranges(self._num_pages(), default_parallelism())
+        return [PageRange(r.start, r.stop) for r in ranges]
 
     def _load_page(self, page: int) -> list[dict]:
         if self.fixture_dir:

@@ -1,14 +1,19 @@
 """Stage-from-URL helper: fetch an HTTPS/FTP source into the local bronze
 zone, then let Spark read the staged copy (SURVEY.md §4.4; S1/S2).
 
-The reference reads TSVs straight off the wire with pandas —
-``pd.read_csv('https://ftp.1000genomes...20130606_sample_info.txt', sep='\\t')``
-(oneKg_fhirizer.py:216) and the GTEx SampleAttributesDS URL
-(gtex_fhirizer.py:90). A distributed engine must NOT do that: a URL read
-happens once on one machine, is unrepeatable on task retry, and leaves no
-provenance. `stage_https` is the bronze-zone twin of those two lines —
-fetch once, atomically, idempotently; every executor then reads the staged
-file through the normal parquet/CSV scan path.
+The reference reads TSVs straight off the wire with pandas (its two
+wire-read source URLs):
+
+- oneKg_fhirizer.py:216, ``pd.read_csv(url, sep='\\t')`` of
+  https://ftp.1000genomes.ebi.ac.uk/vol1/ftp/technical/working/20130606_sample_info/20130606_sample_info.txt
+- gtex_fhirizer.py:90, the SampleAttributesDS annotations at
+  https://storage.googleapis.com/adult-gtex/annotations/v10/metadata-files/GTEx_Analysis_v10_Annotations_SampleAttributesDS.txt
+
+A distributed engine must NOT do that: a URL read happens once on one
+machine, is unrepeatable on task retry, and leaves no provenance.
+`stage_https` is the bronze-zone twin of those two lines — fetch once,
+atomically, idempotently; every executor then reads the staged file
+through the normal parquet/CSV scan path.
 
 Offline-testable: `file://` URLs go through the same code path (tests use
 them; CI has no network).
@@ -21,17 +26,6 @@ import os
 import shutil
 import urllib.parse
 import urllib.request
-
-# The reference's two wire-read source URLs (its own public constants):
-# oneKg_fhirizer.py:216 and gtex_fhirizer.py:90.
-ONEKG_SAMPLE_INFO_URL = (
-    "https://ftp.1000genomes.ebi.ac.uk/vol1/ftp/technical/working/"
-    "20130606_sample_info/20130606_sample_info.txt"
-)
-GTEX_SAMPLE_ATTRIBUTES_URL = (
-    "https://storage.googleapis.com/adult-gtex/annotations/v10/metadata-files/"
-    "GTEx_Analysis_v10_Annotations_SampleAttributesDS.txt"
-)
 
 
 def is_url(path_or_url: str) -> bool:

@@ -44,8 +44,6 @@ XLSX_SCHEMA = (
     "cell_ref string, cell_type string, value string, error string"
 )
 
-_MAIN_NS_HINT = "spreadsheetml"  # sanity check only; matching is local-name
-
 
 def _local(tag: str) -> str:
     return tag.rpartition("}")[2]

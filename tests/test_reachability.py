@@ -1,4 +1,4 @@
-"""Every module and every top-level function or class under
+"""Every module and every top-level function, class or constant under
 ``fhir_etl_spark/`` is reached from an entry point.
 
 Pure ``ast``, no Spark, no imports executed. The entry points are the CLI,
@@ -10,17 +10,20 @@ scripts.
   ``import`` / ``from … import``, including imports inside functions.
   Importing ``a.b.c`` also runs ``a`` and ``a.b``'s ``__init__``, so
   parents count as reached.
-- **Functions and classes.** A name walk over the reached modules starts
-  at their module-level code (decorators and default values included),
-  every def in the entry files, every ``@query``-registered def, and every
-  string constant in ``perfbench/`` (its tracer looks functions up by
-  name). Each name or attribute it meets reaches every top-level def of
-  that name; a reached def's body is walked in turn.
+- **Functions, classes and constants.** A constant is a module-level
+  assignment to a name; dunders such as ``__all__`` are exempt. A name walk
+  over the reached modules starts at their module-level code (decorators,
+  default values and the values assigned to constants included), every def
+  and constant in the entry files, every ``@query``-registered def, and
+  every string constant in ``perfbench/`` (its tracer looks functions up
+  by name). Each name or attribute it meets reaches every top-level def or
+  constant of that name; a reached def's body is walked in turn.
 
 What neither walk reaches is code only its own tests use: delete it with
 its tests, or give it a caller. The one exception is an independent
 reference model that a test checks the program against; it is listed in
-``REFERENCE_MODELS`` with that test.
+``REFERENCE_MODELS`` with that test, and what its body uses counts as
+reached.
 """
 
 from __future__ import annotations
@@ -125,12 +128,33 @@ def _names(node: ast.AST) -> set[str]:
 def _registered(node: ast.AST) -> bool:
     return any(
         isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "query"
-        for d in node.decorator_list
+        for d in getattr(node, "decorator_list", ())
     )
 
 
+def _defined_names(node: ast.AST) -> list[str]:
+    """The names a top-level statement defines: a def's or class's name, or
+    the non-dunder names a plain or annotated assignment binds."""
+    if isinstance(node, _DEF):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    names = [
+        n.id for t in targets for n in ast.walk(t)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+    ]
+    return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
+
+
 def _import_time(node: ast.AST) -> list[ast.AST]:
-    """The parts of a top-level def that run when its module is imported."""
+    """The parts of a top-level def or constant that run when its module is
+    imported."""
+    if not isinstance(node, _DEF):
+        return [node.value]
     parts = list(node.decorator_list)
     if isinstance(node, ast.ClassDef):
         return parts + node.bases + [k.value for k in node.keywords]
@@ -139,8 +163,8 @@ def _import_time(node: ast.AST) -> list[ast.AST]:
 
 @functools.cache
 def unreached_defs() -> tuple[str, ...]:
-    """``module::name`` of every top-level def or class in a reached package
-    module that the name walk does not reach."""
+    """``module::name`` of every top-level def, class or constant in a
+    reached package module that the name walk does not reach."""
     entries = set(_roots())
     files = entries | {_module_path(m) for m in reached_modules()}
     defs: dict[str, list[tuple[Path, ast.AST]]] = {}
@@ -150,10 +174,12 @@ def unreached_defs() -> tuple[str, ...]:
     for path in files:
         tree = _tree(path)
         for node in tree.body:
-            if not isinstance(node, _DEF):
+            names = _defined_names(node)
+            if not names:
                 todo.append(node)
                 continue
-            defs.setdefault(node.name, []).append((path, node))
+            for name in names:
+                defs.setdefault(name, []).append((path, node))
             if path in entries or _registered(node):
                 todo.append(node)
                 seen.add(id(node))
@@ -173,11 +199,13 @@ def unreached_defs() -> tuple[str, ...]:
                     todo.append(node)
 
     reach(strings)
+    # a reference model stays unreached, but what it uses is kept with it
+    todo.extend(node for name in REFERENCE_MODELS for _, node in defs.get(name, ()))
     while todo:
         reach(_names(todo.pop()))
     return tuple(sorted(
-        f"{_module_name(path)}::{node.name}"
-        for found in defs.values()
+        f"{_module_name(path)}::{name}"
+        for name, found in defs.items()
         for path, node in found
         if id(node) not in seen and path.is_relative_to(ROOT / PKG)
     ))
@@ -196,9 +224,10 @@ def test_every_package_module_is_reached_from_an_entry_point():
 def test_every_top_level_def_is_reached_or_a_reference_model():
     unreached = [d for d in unreached_defs() if d.split("::")[1] not in REFERENCE_MODELS]
     assert not unreached, (
-        f"{len(unreached)} top-level def(s) under {PKG}/ are reached from no "
-        "entry point (delete them with their tests, or list an independent "
-        "reference model in REFERENCE_MODELS):\n  " + "\n  ".join(unreached)
+        f"{len(unreached)} top-level def(s) or constant(s) under {PKG}/ are "
+        "reached from no entry point (delete them with their tests, or list an "
+        "independent reference model in REFERENCE_MODELS):\n  "
+        + "\n  ".join(unreached)
     )
 
 

@@ -8,12 +8,18 @@
 - ``transform_1k_files`` returns its membership counts and raises its VCF
   header errors as before, and writes its DocumentReferences in listing
   order with the same bytes at any shuffle-partition setting.
+- A stage's writes run concurrently, their jobs stay in the caller's job
+  group, and a failed write is raised once the others have completed,
+  leaving no staging directory behind.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import shutil
+import threading
+import time
 from contextlib import contextmanager
 
 import pytest
@@ -95,9 +101,42 @@ def _write_pages(folder, rows, per_page):
         (folder / f"page_{p // per_page}.json").write_text(json.dumps(page))
 
 
+SUBJECTS = [{"subjectId": f"GTEX-{i}", "sex": "male", "ageBracket": "20-29",
+             "hardyScale": None} for i in range(6)]
+SAMPLES = [{"aliquotId": f"SM-{i}", "subjectId": f"GTEX-{i % 6}", "dataType": "RNASEQ",
+            "freezeType": "Frozen", "tissueSiteDetailId": "Lung", "tissueSiteDetail": "Lung"}
+           for i in range(9)]
+
+
+def _gtex_inputs(spark, tmp_path, rest_format, **options):
+    """Stage a small GTEx input set under ``tmp_path`` and return
+    ``transform_gtex``'s four source DataFrames, the REST pages read
+    through ``rest_format`` with ``options``."""
+    from fhir_etl_spark.schemas.inputs import GTEX_FILELIST, GTEX_SAMPLE, GTEX_SUBJECT
+
+    _write_pages(tmp_path / "subjects", SUBJECTS, 2)
+    _write_pages(tmp_path / "samples", SAMPLES, 3)
+    (tmp_path / "filelist.json").write_text(json.dumps({"name": "GTEx Analysis V8", "filesets": [
+        {"name": "Protected", "subpath": "p", "files": []},
+        {"name": "Expression", "subpath": "e", "files": [
+            {"name": "x.gct.gz", "release": "v8", "type": "Expression", "size": "1 MiB"}]}]}))
+    (tmp_path / "annotations.tsv").write_text(
+        "SAMPID\tSMTS\nGTEX-1-0001-SM-1\tLung\nGTEX-2-0001-SM-4\tLung\n")
+
+    def pages(name, schema):
+        reader = (spark.read.format(rest_format).option("fixture_dir", str(tmp_path / name))
+                  .option("fields", ",".join(f.name for f in schema.fields)))
+        return reader.options(**options).load()
+
+    return (
+        pages("subjects", GTEX_SUBJECT), pages("samples", GTEX_SAMPLE),
+        spark.read.schema(GTEX_FILELIST).json(str(tmp_path / "filelist.json")),
+        spark.read.option("sep", "\t").option("header", True).csv(str(tmp_path / "annotations.tsv")),
+    )
+
+
 def test_transform_gtex_reads_each_rest_page_once(spark, tmp_path):
     from fhir_etl_spark.pipelines.gtex import transform_gtex
-    from fhir_etl_spark.schemas.inputs import GTEX_FILELIST, GTEX_SAMPLE, GTEX_SUBJECT
     from fhir_etl_spark.sources.rest import PaginatedRestDataSource, PaginatedRestReader
 
     class CountingReader(PaginatedRestReader):
@@ -122,34 +161,12 @@ def test_transform_gtex_reads_each_rest_page_once(spark, tmp_path):
             return CountingReader(schema, dict(self.options))
 
     spark.dataSource.register(CountingRestDataSource)
-    subjects = [{"subjectId": f"GTEX-{i}", "sex": "male", "ageBracket": "20-29",
-                 "hardyScale": None} for i in range(6)]
-    samples = [{"aliquotId": f"SM-{i}", "subjectId": f"GTEX-{i % 6}", "dataType": "RNASEQ",
-                "freezeType": "Frozen", "tissueSiteDetailId": "Lung", "tissueSiteDetail": "Lung"}
-               for i in range(9)]
-    _write_pages(tmp_path / "subjects", subjects, 2)
-    _write_pages(tmp_path / "samples", samples, 3)
-    (tmp_path / "filelist.json").write_text(json.dumps({"name": "GTEx Analysis V8", "filesets": [
-        {"name": "Protected", "subpath": "p", "files": []},
-        {"name": "Expression", "subpath": "e", "files": [
-            {"name": "x.gct.gz", "release": "v8", "type": "Expression", "size": "1 MiB"}]}]}))
-    (tmp_path / "annotations.tsv").write_text(
-        "SAMPID\tSMTS\nGTEX-1-0001-SM-1\tLung\nGTEX-2-0001-SM-4\tLung\n")
     log = tmp_path / "reads.log"
-
-    def pages(name, schema):
-        return (spark.read.format("counting_rest").option("fixture_dir", str(tmp_path / name))
-                .option("fields", ",".join(f.name for f in schema.fields))
-                .option("pages_per_partition", "1").option("read_log", str(log)).load())
+    inputs = _gtex_inputs(spark, tmp_path, "counting_rest", read_log=str(log))
 
     persistent = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     meta = str(tmp_path / "meta")
-    transform_gtex(
-        spark, pages("subjects", GTEX_SUBJECT), pages("samples", GTEX_SAMPLE),
-        spark.read.schema(GTEX_FILELIST).json(str(tmp_path / "filelist.json")),
-        spark.read.option("sep", "\t").option("header", True).csv(str(tmp_path / "annotations.tsv")),
-        meta,
-    )
+    transform_gtex(spark, *inputs, meta)
     reads = sorted(log.read_text().splitlines())
     assert reads == sorted(
         [f"{tmp_path / 'subjects'} {p}" for p in range(3)]
@@ -162,6 +179,32 @@ def test_transform_gtex_reads_each_rest_page_once(spark, tmp_path):
         assert len(f.readlines()) == 9
     with open(f"{meta}/Group.ndjson") as f:
         assert len(json.loads(f.read())["member"]) == 2
+
+
+def test_transform_gtex_writes_overlap(spark, tmp_path, monkeypatch):
+    """The six GTEx writes run concurrently: at least two of them, on
+    different threads, are in flight at the same time."""
+    from fhir_etl_spark.pipelines import gtex
+    from fhir_etl_spark.sources.rest import PaginatedRestDataSource
+
+    spark.dataSource.register(PaginatedRestDataSource)
+    spans = []
+    write = gtex.write_ndjson
+
+    def recording(df, folder, rtype):
+        start = time.perf_counter()
+        path = write(df, folder, rtype)
+        spans.append((threading.get_ident(), start, time.perf_counter()))
+        return path
+
+    monkeypatch.setattr(gtex, "write_ndjson", recording)
+    gtex.transform_gtex(spark, *_gtex_inputs(spark, tmp_path, "paginated_rest"),
+                        str(tmp_path / "meta"))
+    assert len(spans) == 6
+    assert any(
+        a[0] != b[0] and a[1] < b[2] and b[1] < a[2]
+        for a, b in itertools.combinations(spans, 2)
+    )
 
 
 def _onekg_meta(spark, tmp_path):
@@ -236,3 +279,41 @@ def test_transform_1k_files_document_references_in_listing_order(spark, tmp_path
     docs = [json.loads(line) for line in written[0].splitlines()]
     assert [d["identifier"][0]["value"] for d in docs] == names
     assert written[0] == written[1]
+
+
+def test_transform_1k_jobs_carry_the_callers_job_group(spark, tmp_path):
+    """Every job the concurrent writes start is in the caller's job group,
+    so a caller can name, count and cancel a stage's jobs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("transform_1k-test", "transform_1k")
+    try:
+        _onekg_meta(spark, tmp_path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert len(tracker.getJobIdsForGroup("transform_1k-test")) >= 4
+
+
+def test_stage_raises_a_failed_write_after_the_others(spark, tmp_path, monkeypatch):
+    """A write that fails does not stop the stage's other writes: they
+    complete, then its error is raised, and no staging directory is left."""
+    from fhir_etl_spark.pipelines import onekg
+
+    fhirize = onekg.fhirize_specimen_1kg
+
+    def failing(sample_info):
+        resources = fhirize(sample_info)
+        return resources.withColumn("resource", F.when(
+            F.col("resource").isNotNull(), F.raise_error(F.lit("specimen write failed"))
+        ).otherwise(F.col("resource")))
+
+    monkeypatch.setattr(onekg, "fhirize_specimen_1kg", failing)
+    with pytest.raises(Exception, match="specimen write failed"):
+        _onekg_meta(spark, tmp_path)
+    meta = tmp_path / "meta"
+    assert sorted(p.name for p in meta.iterdir()) == [
+        "Patient.ndjson", "ResearchStudy.ndjson", "ResearchSubject.ndjson"
+    ]

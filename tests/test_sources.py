@@ -7,6 +7,9 @@ import json
 
 import pytest
 
+from fhir_etl_spark.session import default_parallelism
+from fhir_etl_spark.sources import contiguous_ranges
+
 
 @pytest.fixture(scope="module")
 def registered(spark):
@@ -28,15 +31,24 @@ def test_paginated_rest_fixture(registered, tmp_path_factory):
         (staged / f"page_{page}.json").write_text(
             json.dumps({"data": data, "paging_info": {"numberOfPages": 5}})
         )
-    df = (
-        registered.read.format("paginated_rest")
-        .option("fixture_dir", str(staged))
-        .option("pages_per_partition", "2")
-        .load()
-    )
-    assert df.count() == 500
-    assert df.rdd.getNumPartitions() == 3  # ceil(5 pages / 2 per partition)
-    assert df.filter(df.subjectId == "GTEX-4-99").count() == 1
+    df = registered.read.format("paginated_rest").option("fixture_dir", str(staged)).load()
+    # one contiguous page range per core, in page order
+    assert df.rdd.getNumPartitions() == min(5, default_parallelism())
+    assert [r["subjectId"] for r in df.collect()] == [
+        f"GTEX-{page}-{i}" for page in range(5) for i in range(100)
+    ]
+
+
+@pytest.mark.parametrize("parts", [1, 2, 3, 4, 7])
+@pytest.mark.parametrize("n", [0, 1, 3, 4, 5, 440])
+def test_contiguous_ranges_partition_zero_to_n(n, parts):
+    """``min(n, parts)`` ranges (one empty range for ``n == 0``) that
+    concatenate to ``0..n`` and differ in size by at most one."""
+    ranges = contiguous_ranges(n, parts)
+    assert len(ranges) == max(1, min(n, parts))
+    assert [i for r in ranges for i in r] == list(range(n))
+    sizes = [len(r) for r in ranges]
+    assert max(sizes) - min(sizes) <= 1
 
 
 def test_rest_requires_source(registered):
@@ -109,7 +121,6 @@ def test_rest_live_endpoint_retries_through_transient_failures(
         registered.read.format("paginated_rest")
         .option("endpoint", endpoint)
         .option("items_per_page", str(state["items"]))
-        .option("pages_per_partition", "2")
         .option("retries", "3")
         .option("backoff_s", "0.05")
         .load()
@@ -145,14 +156,12 @@ def test_ftp_listing_fixture(registered, tmp_path_factory):
     }
     fixture = staged / "listing.json"
     fixture.write_text(json.dumps(listing))
-    df = (
-        registered.read.format("ftp_listing")
-        .option("fixture_json", str(fixture))
-        .option("files_per_partition", "2")
-        .load()
-    )
-    rows = {r["file"]: r for r in df.collect()}
-    assert len(rows) == 4
+    df = registered.read.format("ftp_listing").option("fixture_json", str(fixture)).load()
+    # one contiguous slice of the sorted listing per core, in listing order
+    assert df.rdd.getNumPartitions() == min(4, default_parallelism())
+    collected = df.collect()
+    assert [r["file"] for r in collected] == sorted(listing)
+    rows = {r["file"]: r for r in collected}
     assert rows["ALL.chr1.vcf.gz"]["size"] == 1000
     assert rows["ALL.chr1.vcf.gz"]["last_modified"] == "2014-09-12T14:21:07"
     assert rows["README"]["size"] == 0  # None → 0 default
